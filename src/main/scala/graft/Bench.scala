@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -32,8 +32,12 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
+    // why each query last failed, "Class: message", for bench_full.json
+    val reasons = scala.collection.mutable.Map.empty[String, String]
+    def reason(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
     for ((name, fn) <- ordered) {
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+      try fn(spark, sfDir).count()
+      catch { case NonFatal(e) => reasons(name) = reason(e) }
       dropStorage()
     }
     // Min + median of three INTERLEAVED measured passes (not three
@@ -68,7 +72,7 @@ object Bench {
       for ((name, fn) <- ordered) {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case NonFatal(e) => reasons(name) = reason(e); false }
         val d = (System.nanoTime() - t0) / 1e9
         // bench hygiene: queries that CACHE tables, checkpoint, or
         // register views must not bleed storage/GC pressure into
@@ -95,6 +99,13 @@ object Bench {
     // only queries with NO successful pass count as failed
     val failedNames = failed.toSeq.filterNot(samples.contains).sorted
     val failedJson = failedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val reasonsJson = failedNames
+      .map(n => BenchFormat.jsonString(n) + ":" + BenchFormat.jsonString(reasons(n)))
+      .mkString("{", ",", "}")
+    // the machine behind the numbers: effective task slots and master
+    val sc = spark.sparkContext
+    val machineJson = s""""cpus":${sc.defaultParallelism},"master":""" +
+      BenchFormat.jsonString(sc.master)
     val nFailed = failedNames.size
     val mins = results.map { case (n, mn, _) => (n, mn) }
     val medians = results.map { case (n, _, md) => (n, md) }
@@ -107,7 +118,7 @@ object Bench {
     // n_failed rides alongside value so a round where queries newly fail
     // can never be misread as a speedup (ADVICE r7).
     val full =
-      s"""{"metric":"total","value":$total,"value_median":$totalMedian,"unit":"sec","canary_s":$canaryJson,"queries":${jsonOf(mins)},"queries_median":${jsonOf(medians)},"failed":$failedJson,"n_failed":$nFailed,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_median":$totalMedian,"unit":"sec","canary_s":$canaryJson,"queries":${jsonOf(mins)},"queries_median":${jsonOf(medians)},"failed":$failedJson,"failure_reasons":$reasonsJson,"n_failed":$nFailed,"sf":"$sfDir",$machineJson}"""
     // selective runs (explicit query args) are local iteration — they
     // must not clobber the committed full-registry artifact
     if (args.isEmpty)
@@ -117,7 +128,7 @@ object Bench {
     // per-query detail limited to the TPC-H headline set.
     val headline = mins.filter(_._1.startsWith("tpch_"))
     val headlineJson =
-      s"""{"metric":"total","value":$total,"value_median":$totalMedian,"unit":"sec","canary_s":$canaryJson,"queries":${jsonOf(headline)},"failed":$failedJson,"n_failed":$nFailed,"sf":"$sfDir","n_queries":${results.size},"detail":"bench_full.json"}"""
+      s"""{"metric":"total","value":$total,"value_median":$totalMedian,"unit":"sec","canary_s":$canaryJson,"queries":${jsonOf(headline)},"failed":$failedJson,"n_failed":$nFailed,"sf":"$sfDir","n_queries":${results.size},$machineJson,"detail":"bench_full.json"}"""
     // The driver's stdout parser has recorded "parsed": null three
     // rounds running (VERDICT r3 #4 suspects the sbt "[info] " prefix),
     // so the same line also lands in a FIXED file it can read whole.

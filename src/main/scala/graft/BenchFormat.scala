@@ -23,6 +23,19 @@ object BenchFormat {
   def totalOf(rs: Seq[(String, Double)]): Double =
     rs.map(_._2).filterNot(_.isNaN).sum
 
+  /** JSON string literal: escapes backslash, quote and ALL control
+    * chars (<0x20) — a tab or CR in a message or in builder-authored SQL
+    * would otherwise make a reader's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def minOf(xs: List[Double]): Double = xs.min
   def medianOf(xs: List[Double]): Double = xs.sorted.apply(xs.size / 2)
 }

@@ -51,11 +51,19 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    registerFunctions(spark)
+    spark
+  }
+
+  /** The engine's function surface, registered into `spark`'s session
+    * catalog. No Spark SQL command or job runs per function: scalar
+    * expressions go straight into the function registry, SQL macros
+    * through [[graft.functions.SqlMacros]]. */
+  def registerFunctions(spark: SparkSession): Unit = {
     graft.functions.GraftFunctions.register(spark)
     graft.functions.PrestoCatalog.register(spark)
     graft.functions.GeoCatalog.register(spark)
     graft.functions.TeradataCatalog.register(spark)
     graft.functions.ColorCatalog.register(spark)
-    spark
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Loaders for the driver's parquet testdata (TESTDATA.md).
   *
@@ -9,6 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * catalog tables; `spark.read.parquet` on a directory keeps the same
   * plan shape (FileSourceScanExec with pushed filters + pruned columns),
   * so everything downstream is scale-transparent.
+  *
+  * Schemas come from a driver-side read of the one parquet footer that
+  * Spark's schema inference would read ([[read]]), not from inference
+  * itself, which runs one Spark job per table: loading and registering
+  * the tables runs no job.
   */
 object Tables {
   /** Analyzed-relation cache, keyed by (session, dir, table).
@@ -59,11 +65,18 @@ object Tables {
   private[graft] def isCached(spark: SparkSession, dir: String, name: String): Boolean =
     spark.sessionState.catalog.getTempView(cacheViewName(dir, name)).isDefined
 
+  /** events.ts has shipped as both parquet TIMESTAMP(NANOS) — which
+    * Spark's reader rejects unless spark.sql.legacy.parquet.nanosAsLong
+    * =true (set in [[GraftSession]]) surfaces it as BIGINT nanos — and as
+    * plain timestamp[us]. The events branch switches on the surfaced type
+    * so both vintages of the testdata produce the same
+    * TimestampType column.
+    */
   private def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.types._
-      val raw = eventsRaw(spark, dir)
+      val raw = read(spark, s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         // parquet TIMESTAMP(NANOS) surfaced as BIGINT via
         // spark.sql.legacy.parquet.nanosAsLong. `div` (integer division) —
@@ -80,17 +93,19 @@ object Tables {
           throw new IllegalStateException(
             s"events.ts: unexpected parquet-surfaced type $other")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else read(spark, s"$dir/$name.parquet")
 
-  /** events.ts has shipped as both parquet TIMESTAMP(NANOS) — which
-    * Spark's reader rejects unless spark.sql.legacy.parquet.nanosAsLong
-    * =true (set in [[GraftSession]]) surfaces it as BIGINT nanos — and as
-    * plain timestamp[us]. [[load]] branches on the surfaced type so both
-    * vintages of the driver's testdata produce the same TimestampType
-    * column.
-    */
-  private def eventsRaw(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/events.parquet")
+  /** `spark.read.parquet(path)` with the schema taken from a driver-side
+    * footer read ([[FooterSchema]]) instead of Spark's schema-inference
+    * job: same footer, same conversion, so the same schema, and loading
+    * a table runs no job. With schema merging on (inference then touches
+    * every file), or with no file to read, Spark infers as before. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) spark.read.parquet(path)
+    else FooterSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
 
   /** Scale-adaptive scan parallelization (optimization r19; guide §2.5
     * "input skew — one huge unsplittable file ... repartition

@@ -38,7 +38,7 @@ object GeoCatalog {
        |    'x', cast(split(trim(c), ' ')[0] AS DOUBLE),
        |    'y', cast(split(trim(c), ' ')[1] AS DOUBLE)))""".stripMargin
 
-  private val macros: Seq[(String, String, String)] = Seq(
+  private[graft] val macros: Seq[(String, String, String)] = Seq(
     ("st_point", "(x DOUBLE, y DOUBLE) RETURNS STRING",
       "concat('POINT (', cast(x AS STRING), ' ', cast(y AS STRING), ')')"),
     ("st_x", "(p STRING) RETURNS DOUBLE",
@@ -393,11 +393,12 @@ object GeoCatalog {
     * identifier for e.g. `ST_IsEmpty` is the case-collapsed `st_isempty`
     * (GeoFunctions.java:136-1119) — NOT the snake_case `st_is_empty`
     * spelling used internally above. Every multi-word ST_ macro is
-    * therefore also registered under its Presto-collapsed alias, as a
-    * one-line forwarding macro (macros may call macros; the analyzer
-    * inlines both layers).
+    * therefore also registered under its Presto-collapsed alias: the
+    * original's own SQL function registered a second time under the
+    * alias name (same signature, body and properties), so both names
+    * analyze to the same expression.
     */
-  private val prestoAliases: Seq[(String, String)] = Seq(
+  private[graft] val prestoAliases: Seq[(String, String)] = Seq(
     "st_geometryfromtext" -> "st_geometry_from_text",
     "st_geometrytype"     -> "st_geometry_type",
     "st_numpoints"        -> "st_npoints",
@@ -414,23 +415,9 @@ object GeoCatalog {
     "st_linefromtext"     -> "st_line_from_text")
 
   def register(spark: SparkSession): Unit = {
-    macros.foreach { case (name, sig, body) =>
-      spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $name $sig RETURN $body")
-    }
-    val sigOf = macros.map { case (n, sig, _) => n -> sig }.toMap
+    val registered = SqlMacros.register(spark, macros)
     prestoAliases.foreach { case (alias, orig) =>
-      val sig = sigOf(orig)
-      // "(poly STRING, n INT) RETURNS X" -> forwarded call "poly, n"
-      val paramList = sig.split(" RETURNS ")(0).stripPrefix("(").stripSuffix(")")
-      // comma-split is only safe for simple scalar param types; a future
-      // STRUCT<..>/MAP<..>/DECIMAL(p,s) param would silently generate a
-      // broken forwarder — fail loudly instead
-      require(!paramList.contains('<') && !paramList.contains('('),
-        s"alias forwarder for '$orig' cannot parse nested param types: $sig")
-      val params = paramList
-        .split(",").map(_.trim.split("\\s+")(0)).mkString(", ")
-      spark.sql(
-        s"CREATE OR REPLACE TEMPORARY FUNCTION $alias $sig RETURN $orig($params)")
+      SqlMacros.alias(spark, registered(orig), alias)
     }
   }
 }

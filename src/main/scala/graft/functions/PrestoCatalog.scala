@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   * get the Spark implementation. Two mechanisms, both zero-overhead at
   * execution time:
   *
-  *  - scalar names → SQL macros (`CREATE TEMPORARY FUNCTION … RETURN
-  *    expr`): inlined into the plan by the analyzer, fully codegen'd;
+  *  - scalar names → SQL macros (temporary SQL functions, registered
+  *    by [[SqlMacros]]): inlined into the plan by the analyzer, fully
+  *    codegen'd;
   *  - aggregate names → FunctionRegistry aliases of the built-in
   *    builders.
   *
@@ -20,7 +21,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 object PrestoCatalog {
 
   /** name(params) -> body; Presto semantics documented per entry. */
-  private val sqlMacros: Seq[(String, String, String)] = Seq(
+  private[graft] val sqlMacros: Seq[(String, String, String)] = Seq(
     // StringFunctions.java
     ("strpos", "(s STRING, sub STRING) RETURNS INT", "instr(s, sub)"),
     ("codepoint", "(s STRING) RETURNS INT", "ascii(s)"),
@@ -344,9 +345,7 @@ object PrestoCatalog {
     "merge_hll" -> "hll_union_agg")
 
   def register(spark: SparkSession): Unit = {
-    sqlMacros.foreach { case (name, sig, body) =>
-      spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $name $sig RETURN $body")
-    }
+    SqlMacros.register(spark, sqlMacros)
     val registry = spark.sessionState.functionRegistry
     aggAliases.foreach { case (prestoName, sparkName) =>
       org.apache.spark.sql.catalyst.analysis.FunctionRegistry.builtin

@@ -74,7 +74,7 @@ case class TeradataPatternExpr(child: Expression)
 
 object TeradataCatalog {
 
-  private val sqlMacros: Seq[(String, String, String)] = Seq(
+  private[graft] val sqlMacros: Seq[(String, String, String)] = Seq(
     // TeradataStringFunctions.index — 1-based position of the first
     // occurrence, 0 when absent (delegates to strpos, like Presto)
     ("index", "(s STRING, sub STRING) RETURNS BIGINT",
@@ -99,8 +99,6 @@ object TeradataCatalog {
       FunctionIdentifier("teradata_pattern"),
       new ExpressionInfo(classOf[TeradataPatternExpr].getName, "teradata_pattern"),
       (args: Seq[Expression]) => TeradataPatternExpr(args.head))
-    sqlMacros.foreach { case (name, sig, body) =>
-      spark.sql(s"CREATE OR REPLACE TEMPORARY FUNCTION $name $sig RETURN $body")
-    }
+    SqlMacros.register(spark, sqlMacros)
   }
 }

@@ -52,8 +52,8 @@ object PlanBatch {
         warm.write.format("noop").mode("overwrite").save()
         Files.write(Paths.get(outDir, s"${name}_${suffix}_final.txt"),
           warm.queryExecution.executedPlan.toString.getBytes("UTF-8"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[planbatch] $name FAILED: ${e.getMessage}") }
+      } catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[planbatch] $name FAILED: ${e.getClass.getName}: ${e.getMessage}") }
       dropStorage()
       val ts = (1 to 3).map { i =>
         spark.sparkContext.setJobDescription(s"$name pass $i")

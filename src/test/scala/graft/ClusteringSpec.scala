@@ -70,4 +70,17 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
       logical should include("LogicalRDD")
     } finally spark.conf.unset(Clustering.CheckpointConf)
   }
+
+  test("edge and contracted-edge row counts ride the materializations") {
+    // observe() row counts on the two edge caches replaced two count()
+    // actions (two jobs each under AQE); the values must not move.
+    // sf0.1 gives 16024 / 2033 and 19246 / 5016 for the same two rows.
+    Seq("sim_embed_neardup_full" -> (4024L, 1681L),
+      "dedup_minhash_lsh_full" -> (2040L, 504L)).foreach { case (q, rows) =>
+      SparkEntry.queries(q)(spark, sfDir) // the builder runs the fixpoint
+      withClue(s"$q: ") {
+        (Clustering.lastEdgeRows, Clustering.lastContractedEdgeRows) shouldBe rows
+      }
+    }
+  }
 }
