@@ -1,6 +1,41 @@
 package graft
+import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
+  /** Bench hygiene, shared by every measuring main (Bench, PlanBatch,
+    * ScaleProbe): clearCache() drops CacheManager entries, and
+    * localCheckpoint blocks (registered as persistent RDDs, reclaimed
+    * otherwise only after a driver GC) are unpersisted explicitly, so
+    * storage pressure never bleeds into the next measurement (r14
+    * review).
+    * CONTRACT (ADVICE r14 #5): this unpersists EVERY persistent RDD in
+    * the context, so no gate query may deliberately cache state for
+    * reuse across interleaved bench passes — each invocation must be
+    * self-contained. A future cross-pass cache would be silently
+    * evicted here and must instead persist to the warehouse (the
+    * materializeStar/materializeStemDict pattern). */
+  def dropStorage(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  /** Seconds for one run of the noise canary (VERDICT r8 "What's
+    * wrong" #2): identical code measured twice in round 8 swung the
+    * suite total ~1.35x purely from sandbox load, and nothing in the
+    * JSON let a reader tell that from a regression. A fixed-cost,
+    * data-independent calibration kernel — bit_xor(xxhash64) over a
+    * 128M range, pure codegen CPU, no IO, no shuffle — whose ratio
+    * across runs normalizes out machine load (BENCH_NOTES.md). bit_xor,
+    * not sum: summing 128M 64-bit hashes overflows Long under ANSI
+    * mode. */
+  def canarySeconds(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 134217728L, 1L, 32)
+      .selectExpr("bit_xor(xxhash64(id)) AS h").head()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
@@ -14,70 +49,35 @@ object Bench {
     // (VERDICT r7 "Performance"). One full unmeasured pass compiles
     // every query's generated code and faults in the page cache before
     // anything is timed, so measured passes see a warm JVM regardless
-    // of suite order.
-    // hygiene after every execution: clearCache() drops CacheManager
-    // entries, and localCheckpoint blocks (dsir, BPE — registered as
-    // persistent RDDs, reclaimed otherwise only after a driver GC)
-    // are unpersisted explicitly so storage pressure never bleeds
-    // into the next measurement (r14 review).
-    // CONTRACT (ADVICE r14 #5): this unpersists EVERY persistent RDD
-    // in the context, so no gate query may deliberately cache state
-    // for reuse across interleaved bench passes — each invocation
-    // must be self-contained (true of all 270+ today: localCheckpoints
-    // are per-invocation scaffolding). A future cross-pass cache would
-    // be silently evicted here and must instead persist to the
-    // warehouse (the materializeStar/materializeStemDict pattern).
-    def dropStorage(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
+    // of suite order. Storage is dropped after every execution.
     // why each query last failed, "Class: message", for bench_full.json
     val reasons = scala.collection.mutable.Map.empty[String, String]
     def reason(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
     for ((name, fn) <- ordered) {
       try fn(spark, sfDir).count()
       catch { case NonFatal(e) => reasons(name) = reason(e) }
-      dropStorage()
+      dropStorage(spark)
     }
     // Min + median of three INTERLEAVED measured passes (not three
     // consecutive runs per query): a multi-second machine stall spans
     // consecutive samples of ONE query and fabricates a regression
     // (BENCH_r05's q12-q15 block), but it cannot span the same query
     // in three suite-wide passes minutes apart. Min absorbs ±JIT/GC
-    // noise; median is robust to one lucky sample.
-    // Noise canary (VERDICT r8 "What's wrong" #2): identical code
-    // measured twice in round 8 swung the suite total ~1.35x purely
-    // from sandbox load, and nothing in the JSON let a reader tell
-    // that from a regression. A fixed-cost, data-independent
-    // calibration kernel — sum(xxhash64) over a 128M range, pure
-    // codegen CPU, no IO, no shuffle — is timed once per measured
-    // pass; its min lands in the JSON as canary_s. Cross-round
-    // comparisons divide by the canary ratio to normalize out machine
-    // load (BENCH_NOTES.md).
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
-      // bit_xor, not sum: summing 128M 64-bit hashes overflows Long
-      // under ANSI mode
-      spark.range(0L, 134217728L, 1L, 32)
-        .selectExpr("bit_xor(xxhash64(id)) AS h").head()
-      (System.nanoTime() - t0) / 1e9
-    }
-    canaryOnce() // unmeasured warm-up, same as the suite
+    // noise; median is robust to one lucky sample. The canary is
+    // timed once per measured pass; its min lands in the JSON as
+    // canary_s.
+    canarySeconds(spark) // unmeasured warm-up, same as the suite
     val canarySamples = scala.collection.mutable.ListBuffer.empty[Double]
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val failed = scala.collection.mutable.Set.empty[String]
     for (_ <- 1 to 3) {
-      canarySamples += canaryOnce()
+      canarySamples += canarySeconds(spark)
       for ((name, fn) <- ordered) {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
           catch { case NonFatal(e) => reasons(name) = reason(e); false }
         val d = (System.nanoTime() - t0) / 1e9
-        // bench hygiene: queries that CACHE tables, checkpoint, or
-        // register views must not bleed storage/GC pressure into
-        // later measurements
-        dropStorage()
+        dropStorage(spark)
         // a fast-failing query must not record its (tiny) elapsed time
         // as a legitimate sample and deflate the total — flag it instead
         if (ok) samples(name) = d :: samples.getOrElse(name, Nil)

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a bipartite (id, bucket) edge list by
   * min-label propagation — the clustering stage shared by the LSH dedup
@@ -21,21 +22,56 @@ import org.apache.spark.storage.StorageLevel
   *
   * Reference semantics: presto-ads has no clustering operator — this is
   * the dedup completion the 100 TB pipeline needs (VERDICT r2 §3).
-  * Each round's result is materialized as a flat localCheckpoint leaf,
-  * which truncates lineage — the default since r20; the
-  * [[CheckpointConf]] session conf set to false selects persist()
-  * instead.
+  * Every materialization is an eager localCheckpoint: a flat
+  * LogicalRDD leaf, so a later round's plan never embeds the rounds
+  * before it. (A persist() wraps the round in an InMemoryRelation
+  * whose plan embeds the whole child tree; at sf0.1 that cost 1.5-4.6 s
+  * of driver re-planning per action by round 5, against 0.04-0.16 s
+  * for the flat leaves — OPTIMIZATION_r20.md, BENCH_NOTES.md.) The
+  * checkpoint blocks live on executors, so a lost executor fails the
+  * query instead of recomputing the round.
   */
 object Clustering {
 
+  /** What one fixpoint run did: the propagation rounds and whether the
+    * label sum settled within `maxIters`, and the rows of the edge list
+    * vs the contracted cluster graph the tail rounds iterate on. */
+  final case class FixpointStats(rounds: Int, converged: Boolean,
+      edgeRows: Long, contractedEdgeRows: Long)
+
+  /** Stats of the most recently finished fixpoint, published in one
+    * write per call, so harnesses that reach the fixpoint only through
+    * a query builder (ScaleProbe) can record them without log scraping.
+    * Callers that hold the call read [[fixpointWithStats]]' result. */
+  @volatile var lastStats: FixpointStats = FixpointStats(0, false, 0L, 0L)
+
   /** One propagation round: label(id) ← min over id's buckets of the
-    * bucket's member-label minimum. Monotone non-increasing per id. */
-  def propagateRound(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val bucketMin = edges.join(labels, "id")
+    * bucket's member-label minimum. Monotone non-increasing per id.
+    * The same edges are held twice, hash-partitioned by id (`byId`, for
+    * the labels join) and by bucket (`byBucket`, for the join back), so
+    * neither join re-shuffles the edge side. The SHUFFLE_HASH hints
+    * keep the label side from being broadcast: labels are one row per
+    * doc, corpus-sized at cluster scale. */
+  private def round(byId: DataFrame, byBucket: DataFrame)(
+      labels: DataFrame): DataFrame = {
+    val bucketMin = byId.join(labels.hint("shuffle_hash"), "id")
       .groupBy("bucket").agg(min("cluster").as("bmin"))
-    edges.join(bucketMin, "bucket")
+    byBucket.join(bucketMin.hint("shuffle_hash"), "bucket")
       .groupBy("id").agg(min("bmin").as("cluster"))
   }
+
+  /** Round 1 folded into initialization: with cluster(id)=id the bucket
+    * minimum is just min(id) per bucket — no labels join yet (and on
+    * the bucket-partitioned edges the aggregate + join are
+    * exchange-free: only the final groupBy(id) moves data). */
+  private def foldedInit(byBucket: DataFrame): DataFrame =
+    byBucket.join(byBucket.groupBy("bucket").agg(min("id").as("bmin"))
+        .hint("shuffle_hash"), "bucket")
+      .groupBy("id").agg(min("bmin").as("cluster"))
+
+  /** One [[round]] over an edge list held once, on both sides. */
+  def propagateRound(edges: DataFrame, labels: DataFrame): DataFrame =
+    round(edges, edges)(labels)
 
   /** Lazily unrolled n-round propagation — pure plan, no actions; used
     * by plan-shape tests to assert the per-round shuffle shape. */
@@ -45,61 +81,9 @@ object Clustering {
     (1 to rounds).foldLeft(init)((l, _) => propagateRound(edges, l))
   }
 
-  // the returned labels frame must stay persisted while the caller's
-  // downstream aggregates run (unpersisting immediately would replay
-  // every round); releasing it on the NEXT fixpoint call bounds the
-  // leak to one cached frame per session instead of one per query run
-  private var lastCaches: List[DataFrame] = Nil
-
-  // observability for scale probes (VERDICT r3 #3): round count and
-  // convergence of the most recent fixpoint, mirrored from the stderr
-  // line so harness code can record them without log scraping
-  @volatile var lastRounds: Int = 0
-  @volatile var lastConverged: Boolean = false
-  // contraction observability (r20; VERDICT r19 next #4's "done"
-  // metric): edge rows entering the fixpoint vs rows of the contracted
-  // cluster graph the tail rounds actually iterate on
-  @volatile var lastEdgeRows: Long = 0L
-  @volatile var lastContractedEdgeRows: Long = 0L
-
-  /** Conf flag (r16; VERDICT r15 next #7): when true (the DEFAULT
-    * since r20), each fixpoint materialization localCheckpoints
-    * (eager, flat LogicalRDD leaf) instead of persisting, TRUNCATING
-    * lineage so round r's plan never chains back through rounds
-    * 1..r-1.
-    *
-    * r20 flipped the default after profiling (ProfileFixpoint,
-    * sf0.1): a persist() wraps the round in an InMemoryRelation whose
-    * plan EMBEDS the full child tree, so each later action re-plans
-    * an adaptive plan nested one level deeper per materialization —
-    * measured 1.5-4.6 s of pure driver planning per action by round
-    * 5+ (32 cores, ≤30k rows!), vs 0.04-0.16 s with flat checkpoint
-    * leaves. The r16 "persist is cheaper locally" measurement
-    * predates the r19 cached-edge layers that deepened the nesting.
-    * localCheckpoint trades fault-tolerance for speed (blocks live on
-    * executors); a deployment that must survive executor loss sets
-    * the conf to false (persist path) or swaps in reliable
-    * checkpoint() via spark.checkpoint.dir. */
-  val CheckpointConf = "spark.graft.clustering.checkpoint"
-
-  /** Eagerly materialize a round: localCheckpoint already runs the
-    * plan (via withAction, so observe() metrics on `df` fire during
-    * it — a separate count() would be a second job per round and,
-    * on the checkpointed frame, could never fire them anyway: the
-    * CollectMetrics node is gone from the flat leaf); the persist
-    * branch still needs the explicit count. */
-  private def roundMaterialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption(CheckpointConf)
-        .forall(_.toBoolean))
-      df.localCheckpoint(eager = true)
-    else {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
-
   /** Iterate propagation until the label assignment is stable.
-    * Returns (id, cluster) with cluster = component-minimum id.
+    * Returns (id, cluster) with cluster = component-minimum id, as a
+    * localCheckpoint leaf that stays stored for the caller's actions.
     *
     * `requireConverged` (r17; ADVICE r16 #1): when true, hitting the
     * maxIters valve with the label sum still moving THROWS instead of
@@ -109,158 +93,118 @@ object Clustering {
     * exists to prevent, with no error raised. Dedup callers keep the
     * default: an early-cut clustering merely under-merges (keeps an
     * extra survivor), which degrades recall, not correctness of the
-    * guarantee the operator advertises.
-    *
-    * Synchronized for its WHOLE duration (ADVICE r3): two concurrent
-    * fixpoints would otherwise race on `lastCaches` between the
-    * release of the previous cache and the publish of the new one, and
-    * on the `last*` stats fields.
-    * Serializing concurrent fixpoints is acceptable — the engine's
-    * query harnesses run queries sequentially, and the iterative jobs
-    * inside would contend for the same executors anyway. */
+    * guarantee the operator advertises. */
   def propagateToFixpoint(edges: DataFrame, maxIters: Int = 10,
-      requireConverged: Boolean = false): DataFrame = synchronized {
+      requireConverged: Boolean = false): DataFrame =
+    fixpointWithStats(edges, maxIters, requireConverged)._1
+
+  /** [[propagateToFixpoint]] together with the call's own stats. Holds
+    * no state across calls: every intermediate checkpoint is released
+    * before it returns (or throws), and only the returned frame's
+    * blocks stay stored, so concurrent calls never touch each other's
+    * storage. */
+  def fixpointWithStats(edges: DataFrame, maxIters: Int = 10,
+      requireConverged: Boolean = false): (DataFrame, FixpointStats) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    lastCaches.foreach(_.unpersist())
-    lastCaches = Nil
-    // Optimization r19 (guide §2.4 — two operations keyed the same way
-    // share one exchange): the edge table is hash-partitioned ONCE on
-    // each of its two join keys and cached, so no fixpoint round ever
-    // re-shuffles it — each round's two joins run exchange-free on the
-    // edge side and only the label-sized aggregate streams move. The
-    // SHUFFLE_HASH hint on the label side pins the strategy: without
-    // it the planner broadcasts the (locally tiny) label frame every
-    // round — a per-round driver collect + broadcast build that is
-    // pure latency here and a non-starter at cluster scale where
-    // labels are corpus-sized (one row per doc).
-    // Edge caches and every round's labels go through roundMaterialize
-    // (r20): under the default checkpoint mode each is a FLAT
-    // LogicalRDD leaf that keeps its hash partitioning, so rounds stay
-    // exchange-free on the edge side without the nested-InMemoryRelation
-    // replanning cost persist() was paying per action (see
-    // CheckpointConf). unpersist() on a checkpointed frame is a no-op;
-    // blocks are bounded per invocation and released by the harnesses'
-    // dropStorage (persist mode keeps the explicit releases).
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the RDD behind each intermediate checkpoint: the LogicalRDD leaf
+    // holds the stored RDD itself (`df.rdd` would be a fresh mapped
+    // RDD whose unpersist frees nothing)
+    val intermediates = scala.collection.mutable.ListBuffer.empty[RDD[_]]
+    def intermediate(df: DataFrame): DataFrame = {
+      val m = df.localCheckpoint(eager = true)
+      intermediates ++= m.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      m
+    }
     // materialize `df` with one aggregate `metric` observed on the
-    // materializing action itself: one job yields both, where a
+    // materializing action itself: the eager checkpoint runs the plan
+    // (via withAction, so the Observation fires during it), where a
     // separate count()/sum action would cost a second job (two under
     // AQE) per value
-    def observed(df: DataFrame, metric: org.apache.spark.sql.Column): (DataFrame, Long) = {
-      val obs = new org.apache.spark.sql.Observation
-      val m = roundMaterialize(df.observe(obs, metric.as("v")))
+    def observed(df: DataFrame, metric: Column): (DataFrame, Long) = {
+      val obs = new Observation
+      val m = intermediate(df.observe(obs, metric.as("v")))
       (m, obs.get("v").asInstanceOf[Long])
     }
-    // edge-row count for the scale probes rides the edge cache's own
-    // materialization
-    val (eById, edgeRows) = observed(edges.select($"id", $"bucket")
-      .repartition(nParts, $"id"), count(lit(1)))
-    val eByBucket = roundMaterialize(eById.repartition(nParts, $"bucket"))
-    def round(labels: DataFrame): DataFrame = {
-      val bucketMin = eById.join(labels.hint("shuffle_hash"), "id")
-        .groupBy("bucket").agg(min("cluster").as("bmin"))
-      eByBucket.join(bucketMin.hint("shuffle_hash"), "bucket")
-        .groupBy("id").agg(min("bmin").as("cluster"))
+    // Optimization r19 (guide §2.4 — two operations keyed the same way
+    // share one exchange): the edge table is hash-partitioned ONCE on
+    // each of its two join keys and checkpointed — a flat leaf that
+    // keeps its hash partitioning — so no fixpoint round ever
+    // re-shuffles it: each round's two joins run exchange-free on the
+    // edge side and only the label-sized aggregate streams move.
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def partitioned(e: DataFrame): (DataFrame, DataFrame, Long) = {
+      val (byId, rows) = observed(e.repartition(nParts, $"id"), count(lit(1)))
+      (byId, intermediate(byId.repartition(nParts, $"bucket")), rows)
     }
-    // round 1 folded into initialization: with cluster(id)=id the
-    // bucket minimum is just min(id) per bucket — no labels join yet
-    // (and on the bucket-partitioned cache the aggregate + join are
-    // exchange-free: only the final groupBy(id) moves data)
     // convergence sum rides the materializing action as an observed
     // metric — one job materializes the round AND yields the sum
     def sumOnce(df: DataFrame): (DataFrame, Long) = observed(df, sum($"cluster"))
-    // the FIRST action runs three rounds (the folded init + one double
-    // round): measured components converge in 5-7 rounds, so a deeper
-    // first plan saves one whole action — the per-action latency
-    // (stage scheduling + cache materialization + convergence check)
-    // is the fixpoint's floor, locally and on a cluster
-    val (labels, _) = sumOnce(round(round(eByBucket.join(
-        eByBucket.groupBy($"bucket").agg(min($"id").as("bmin"))
-          .hint("shuffle_hash"), "bucket")
-      .groupBy($"id").agg(min($"bmin").as("cluster")))))
-    // --- label-graph contraction (optimization r20; VERDICT r19 next
-    // #4, guide §2.3 "shuffle keys and metadata instead of payloads"):
-    // the first action collapses every star, so the remaining rounds
-    // only need the CLUSTER graph — each edge projected to
-    // (cluster(id), bucket) and deduped. Components are preserved (two
-    // ids sharing a bucket implies their cluster labels share it), and
-    // every label value is itself an original id with cluster(M) = M
-    // for a component minimum M, so the contracted fixpoint's minima
-    // ARE the original components' minima. Per-round shuffle bytes
-    // drop from O(|edges|) to O(|cluster graph|), which shrinks as
-    // merging proceeds — at scale the tail rounds iterate on
-    // ~|components| rows instead of the corpus (lastContractedEdgeRows
-    // vs lastEdgeRows records the ratio for the scale probes).
-    val cEdges = eById.join(labels.hint("shuffle_hash"), "id")
-      .select($"cluster".as("id"), $"bucket").distinct()
-    val (cById, contractedRows) =
-      observed(cEdges.repartition(nParts, $"id"), count(lit(1)))
-    val cByBucket = roundMaterialize(cById.repartition(nParts, $"bucket"))
-    def cRound(ls: DataFrame): DataFrame = {
-      val bucketMin = cById.join(ls.hint("shuffle_hash"), "id")
-        .groupBy("bucket").agg(min("cluster").as("bmin"))
-      cByBucket.join(bucketMin.hint("shuffle_hash"), "bucket")
-        .groupBy("id").agg(min("bmin").as("cluster"))
-    }
-    // contracted folded init + double round, as above
-    var (cLabels, prevSum) = sumOnce(cRound(cRound(cByBucket.join(
-        cByBucket.groupBy($"bucket").agg(min($"id").as("bmin"))
-          .hint("shuffle_hash"), "bucket")
-      .groupBy($"id").agg(min($"bmin").as("cluster")))))
-    lastEdgeRows = edgeRows
-    lastContractedEdgeRows = contractedRows
-    // the full edge caches only feed the first action and the
-    // contraction projection, both done now
-    eById.unpersist()
-    eByBucket.unpersist()
-    var it = 1
-    var converged = false
-    while (!converged && it < maxIters) {
-      // two rounds per convergence action: labels are monotone
-      // non-increasing, so a stationary sum across the DOUBLE round
-      // implies both sub-rounds were stationary — same fixpoint,
-      // half the driver round-trips (each action is the latency
-      // floor on an iterative job, locally and on a cluster)
-      val (next, nextSum) = sumOnce(cRound(cRound(cLabels)))
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      cLabels.unpersist()
-      cLabels = next
-      it += 1
-    }
-    cById.unpersist()
-    cByBucket.unpersist()
-    if (requireConverged && !converged) {
-      labels.unpersist()
-      cLabels.unpersist()
-      sys.error(s"label propagation still moving after maxIters=$maxIters " +
-        "rounds — refusing to return a non-converged clustering " +
-        "(requireConverged=true)")
-    }
-    // re-attach the contracted assignment to the full id set: each id's
-    // post-star label maps to its component minimum. Materialized once
-    // (persist or, under CheckpointConf, localCheckpoint — keeping the
-    // returned frame a leaf, the old contract) so the two inputs can be
-    // released immediately; the result cache follows the
-    // release-on-next-call protocol as before.
-    val out = roundMaterialize(labels.join(
-      cLabels.select($"id".as("cluster"), $"cluster".as("cmin"))
-        .hint("shuffle_hash"), "cluster")
-      .select($"id", $"cmin".as("cluster")))
-    labels.unpersist()
-    cLabels.unpersist()
-    // observability for scale runs (VERDICT r3 #3): how close the
-    // corpus comes to the maxIters valve. The first TWO actions run
-    // three rounds each (folded init + one double round, full then
-    // contracted); each later loop iteration is a DOUBLE round.
-    lastRounds = 6 + 2 * (it - 1)
-    lastConverged = converged
-    System.err.println(
-      s"[clustering] fixpoint after ${6 + 2 * (it - 1)} rounds " +
-        s"(${2 + it} actions, maxIters=$maxIters, converged=$converged, " +
-        s"edges=$lastEdgeRows contracted=$lastContractedEdgeRows)")
-    lastCaches = List(out)
-    out
+    try {
+      val (eById, eByBucket, edgeRows) =
+        partitioned(edges.select($"id", $"bucket"))
+      val fullRound = round(eById, eByBucket) _
+      // the FIRST action runs three rounds (the folded init + one double
+      // round): measured components converge in 5-7 rounds, so a deeper
+      // first plan saves one whole action — the per-action latency
+      // (stage scheduling + checkpoint materialization + convergence
+      // check) is the fixpoint's floor, locally and on a cluster
+      val (labels, _) = sumOnce(fullRound(fullRound(foldedInit(eByBucket))))
+      // --- label-graph contraction (optimization r20; VERDICT r19 next
+      // #4, guide §2.3 "shuffle keys and metadata instead of payloads"):
+      // the first action collapses every star, so the remaining rounds
+      // only need the CLUSTER graph — each edge projected to
+      // (cluster(id), bucket) and deduped. Components are preserved (two
+      // ids sharing a bucket implies their cluster labels share it), and
+      // every label value is itself an original id with cluster(M) = M
+      // for a component minimum M, so the contracted fixpoint's minima
+      // ARE the original components' minima. Per-round shuffle bytes
+      // drop from O(|edges|) to O(|cluster graph|), which shrinks as
+      // merging proceeds — at scale the tail rounds iterate on
+      // ~|components| rows instead of the corpus (contractedEdgeRows
+      // vs edgeRows records the ratio for the scale probes).
+      val (cById, cByBucket, contractedRows) = partitioned(
+        eById.join(labels.hint("shuffle_hash"), "id")
+          .select($"cluster".as("id"), $"bucket").distinct())
+      val cRound = round(cById, cByBucket) _
+      // contracted folded init + double round, as above
+      var (cLabels, prevSum) = sumOnce(cRound(cRound(foldedInit(cByBucket))))
+      var it = 1
+      var converged = false
+      while (!converged && it < maxIters) {
+        // two rounds per convergence action: labels are monotone
+        // non-increasing, so a stationary sum across the DOUBLE round
+        // implies both sub-rounds were stationary — same fixpoint,
+        // half the driver round-trips (each action is the latency
+        // floor on an iterative job, locally and on a cluster)
+        val (next, nextSum) = sumOnce(cRound(cRound(cLabels)))
+        converged = nextSum == prevSum
+        prevSum = nextSum
+        cLabels = next
+        it += 1
+      }
+      // how close the corpus comes to the maxIters valve (VERDICT r3
+      // #3): the first TWO actions run three rounds each (folded init +
+      // one double round, full then contracted); each later loop
+      // iteration is a DOUBLE round
+      val stats = FixpointStats(6 + 2 * (it - 1), converged, edgeRows,
+        contractedRows)
+      lastStats = stats
+      if (requireConverged && !converged)
+        sys.error(s"label propagation still moving after maxIters=$maxIters " +
+          "rounds — refusing to return a non-converged clustering " +
+          "(requireConverged=true)")
+      // re-attach the contracted assignment to the full id set: each
+      // id's post-star label maps to its component minimum
+      val out = labels.join(
+        cLabels.select($"id".as("cluster"), $"cluster".as("cmin"))
+          .hint("shuffle_hash"), "cluster")
+        .select($"id", $"cmin".as("cluster")).localCheckpoint(eager = true)
+      System.err.println(
+        s"[clustering] fixpoint after ${stats.rounds} rounds " +
+          s"(${2 + it} actions, maxIters=$maxIters, converged=$converged, " +
+          s"edges=$edgeRows contracted=$contractedRows)")
+      (out, stats)
+    } finally intermediates.foreach(_.unpersist(blocking = false))
   }
 }

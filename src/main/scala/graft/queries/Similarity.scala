@@ -83,9 +83,8 @@ object Similarity extends QueryGroup {
     * The wide vector column is dropped BEFORE the explode so only
     * (id, band, sig) passes through the bucket join; vectors rejoin by
     * id for the exact rescore. */
-  /** sim_embed_neardup_full's edge list — private[graft] so the
-    * fixpoint profiler times the shipped frame, never a drifted copy. */
-  private[graft] def neardupEdges(s: SparkSession, dir: String): DataFrame = {
+  /** sim_embed_neardup_full's edge list. */
+  private def neardupEdges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val all = withPlanted(vecs(s, dir), 3)
     bandedIds(all)
@@ -227,17 +226,18 @@ object Similarity extends QueryGroup {
     val a0 = assignCells(corpus, c0)
     // c1 is consumed by BOTH the final assignment and every caller's
     // probe ranking (and, in the materialized row, two separate write
-    // actions). r20: materialized as a LAZY localCheckpoint instead
-    // of the r19 persist — the 20-row table is a flat leaf, so no
-    // consumer action re-plans the embedded two-pass Lloyd chain (the
-    // nested-InMemoryRelation replanning cost ProfileFixpoint
-    // measured), and the release-on-next-call swap protocol (ADVICE
-    // r19 #4's race) disappears with the cache entry itself: 20-row
-    // checkpoint blocks are per-invocation scaffolding the harnesses'
-    // dropStorage reclaims. Lazy (eager = false) keeps the persist's
-    // compute-on-first-action semantics, so an action that provably
-    // needs no centroid values still skips the Lloyd chain exactly as
-    // it did in r19 (the sim_ann_recall bench-comparability note).
+    // actions). r20: materialized as a localCheckpoint instead of the
+    // r19 persist — the 20-row table is a flat leaf, so no consumer
+    // action re-plans the embedded two-pass Lloyd chain (the
+    // nested-InMemoryRelation replanning cost measured in
+    // OPTIMIZATION_r20.md), and the release-on-next-call swap protocol
+    // (ADVICE r19 #4's race) disappears with the cache entry itself:
+    // 20-row checkpoint blocks are per-invocation scaffolding the
+    // harnesses' dropStorage reclaims. `eager = false` does NOT defer
+    // the Lloyd chain: under AQE the checkpoint plans the frame through
+    // an adaptive plan, which runs every shuffle stage (both Lloyd
+    // aggregates) here, at build time; only the final stage waits for
+    // the first action.
     val c1 = roundedCentroids(a0).localCheckpoint(eager = false)
     val a1 = assignCells(corpus, c1)
     (a1, c1)
@@ -652,10 +652,12 @@ object Similarity extends QueryGroup {
     val assign1 = sub.join(broadcast(seedsArr), Seq("m"))
       .select($"vec_id", $"m", nearest($"cands", $"sv").as("cid"), $"sv")
     // the M·K=32-row codebook feeds the encode pass, the ADC table,
-    // and (in the materialized row) its own write — one LAZY
-    // localCheckpoint so the seed-assignment chain executes once and
-    // every consumer plans against a flat 32-row leaf (r20, the c1
-    // treatment; replaces the r19 persist + release-on-next-call swap)
+    // and (in the materialized row) its own write — one localCheckpoint
+    // so the seed-assignment chain executes once and every consumer
+    // plans against a flat 32-row leaf (r20, the c1 treatment; replaces
+    // the r19 persist + release-on-next-call swap). As for c1,
+    // `eager = false` still runs the codebook aggregate's shuffle stage
+    // at build time under AQE; only the final stage is deferred.
     val codebook = assign1.groupBy($"m", $"cid")
       .agg(array((0 until Sub).map(i =>
         avg(element_at($"sv", i + 1))): _*).as("cw"))
@@ -1809,22 +1811,20 @@ object Similarity extends QueryGroup {
       import s.implicits._
       // exact3 (30 rows) is consumed twice (the hits semi-join and the
       // `possible` scalar) — checkpoint it once like the tiers below.
-      // LAZY (eager = false), deliberately, here and below: a lazy
-      // checkpoint still truncates the plan to a LogicalRDD leaf and
-      // still computes ONCE under any action that materializes it
-      // (both consumers share the same RDD), but it preserves r19's
-      // action semantics — an action that provably needs no tier
-      // values (the bench's count(): the optimizer eliminates the
-      // left joins against unique-keyed aggregates) still skips the
-      // tier work, keeping the bench series comparable across rounds
-      // instead of silently re-defining what count() measures.
+      // `eager = false` here and below truncates the plan to a
+      // LogicalRDD leaf that both consumers share, but it defers less
+      // than its name says: under AQE the checkpoint plans the frame
+      // through an adaptive plan, which runs EVERY shuffle stage
+      // (each tier's full serve pipeline) here, at build time; only
+      // the final stage waits for the first action. An action that
+      // needs no tier values therefore does not skip the tier work.
       val exact3 = exactTopk(s, dir, 3).select($"q_id", $"vec_id")
         .localCheckpoint(eager = false)
       // Each tier's shortlist is ≤ |Q|·k rows but composes that tier's
       // FULL serve pipeline; the union of the raw builders was a
       // ~561-Exchange tree referenced TWICE below (hits + retrieved),
       // so every tier pipeline was planned into the action twice.
-      // r20: ONE lazy localCheckpoint truncates the union to a
+      // r20: ONE localCheckpoint truncates the union to a
       // ~330-row LogicalRDD leaf (optimization r20; VERDICT r19 next
       // #2, guide §3.3 "materialising an intermediate truncates the
       // plan" / §5), and BOTH per-tier counts now come from a SINGLE
@@ -1835,13 +1835,11 @@ object Similarity extends QueryGroup {
       // rejected: checkpointing each tier separately — 11 eager
       // actions serialize the legs, 11.7 → 14.8 s; and an EAGER union
       // checkpoint with the old twin aggregates — fastest under the
-      // noop sink, 6.4-7.0 s, but it changes what the bench's count()
-      // action measures: count() eliminates the left joins against
-      // the unique-keyed aggregates and so never ran the tier
-      // pipelines in r19's lazy plan — an eager builder would
-      // re-define that series as an ~8.6 s row. The single-aggregate
-      // lazy shape keeps the real work single-pass AND preserves
-      // count()'s pruning semantics.) Values unchanged: exact3's
+      // noop sink, 6.4-7.0 s. That one was turned down to keep the
+      // bench's count() from running the tier pipelines, on the
+      // premise that a lazy checkpoint skips them; under AQE it does
+      // not: this checkpoint runs their shuffle stages at build time
+      // too.) Values unchanged: exact3's
       // (q_id, vec_id) pairs are unique by construction (row_number
       // enumerates distinct corpus rows per query), so a left join
       // never duplicates a shortlist row and count(hit) equals the
@@ -1899,17 +1897,6 @@ object Similarity extends QueryGroup {
   private[queries] val SemDedupTarget = 50
   private[queries] val SemDedupRounds = 8
 
-  /** Caches held live for the frame returned by the LAST
-    * [[semdedupClusters]] call (which is lazy — unpersisting inside the
-    * call would release them before any action runs). Released at the
-    * start of the next call PER SESSION (r13, VERDICT r12 wrong #3:
-    * keyed by SparkSession so two sessions in one JVM cannot release
-    * each other's caches), mirroring
-    * [[Clustering.propagateToFixpoint]]'s `lastCaches` protocol. */
-  private val lastSemCaches =
-    scala.collection.concurrent.TrieMap
-      .empty[org.apache.spark.sql.SparkSession, List[DataFrame]]
-
   /** Derived-k semantic clusters (r10, VERDICT r9 perf item): start
     * from the IVF cell and recursively bisect every cluster still
     * larger than `target`, so k tracks corpus size and cluster sizes —
@@ -1937,9 +1924,8 @@ object Similarity extends QueryGroup {
     *    (measured 42 s). The window form is a LINEAR chain — one
     *    WindowExec (one hash-partition shuffle on `cl`) per round, no
     *    branching, no persist protocol, and the same per-cluster
-    *    values. Only the final result is persisted, because
-    *    sim_semdedup self-joins it; that cache is released
-    *    lastLabels-style on the NEXT call (see [[lastSemCaches]]).
+    *    values. Only the final result is materialized, because
+    *    sim_semdedup self-joins it.
     *  - A cluster whose members all share one projection value
     *    (round(max(pr),6) = round(min(pr),6) — e.g. >target exact
     *    duplicates, the core semantic-dedup workload) can never split
@@ -1953,9 +1939,7 @@ object Similarity extends QueryGroup {
     *    lands with its source for the first 5 rounds; in the gate
     *    corpus natural `pr` spread means the tie-break never fires. */
   private[graft] def semdedupClusters(all: DataFrame, target: Int,
-      rounds: Int): DataFrame = synchronized {
-    val session = all.sparkSession
-    lastSemCaches.remove(session).getOrElse(Nil).foreach(_.unpersist())
+      rounds: Int): DataFrame = {
     val withPr = all
       .withColumn("pr", expr(
         "aggregate(transform(v, (x, i) -> CASE WHEN i % 2 = 0 THEN x ELSE -x END), " +
@@ -1981,14 +1965,10 @@ object Similarity extends QueryGroup {
     // r20: eager localCheckpoint instead of persist — sim_semdedup
     // self-joins this frame, and with persist BOTH join branches
     // re-planned the embedded 8-round window chain per action (the
-    // nested-InMemoryRelation cost ProfileFixpoint measured); the
-    // checkpoint is a flat leaf. lastSemCaches' release protocol is
-    // kept for the persist-era frames of older sessions (unpersist on
-    // a checkpointed frame is a harmless no-op; blocks are reclaimed
-    // by the harnesses' dropStorage).
-    val cached = out.localCheckpoint()
-    lastSemCaches.put(session, List(cached))
-    cached
+    // nested-InMemoryRelation cost measured in OPTIMIZATION_r20.md);
+    // the checkpoint is a flat leaf. Its blocks belong to the returned
+    // frame and are reclaimed by the harnesses' dropStorage.
+    out.localCheckpoint()
   }
 
   /** DuckDB re-derivation of [[semdedupClusters]] — `rounds` unrolled

@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.Clustering
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -51,24 +52,20 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("checkpointed rounds truncate lineage and leave labels unchanged") {
-    // r16 (VERDICT r15 next #7): with the conf on, each round
-    // localCheckpoints — the returned frame's plan is a leaf scan of
-    // checkpointed blocks, never a join chain back through rounds
-    // 1..r-1 — and the fixpoint labels are bit-identical to the
-    // persist() path
+    // every round localCheckpoints — the returned frame's plan is a
+    // leaf scan of checkpointed blocks, never a join chain back through
+    // rounds 1..r-1 — and the fixpoint labels equal the lazily unrolled
+    // reference propagation's
     import spark.implicits._
     val edges = (1 to 5).flatMap(i =>
       Seq((i.toLong, s"e$i"), ((i + 1).toLong, s"e$i"))).toDF("id", "bucket")
-    val plain = Clustering.propagateToFixpoint(edges)
+    val reference = Clustering.propagateRounds(edges, 6)
       .orderBy($"id").as[(Long, Long)].collect()
-    spark.conf.set(Clustering.CheckpointConf, "true")
-    try {
-      val ckpt = Clustering.propagateToFixpoint(edges)
-      ckpt.orderBy($"id").as[(Long, Long)].collect() shouldBe plain
-      val logical = ckpt.queryExecution.logical.toString
-      logical should not include "Join"
-      logical should include("LogicalRDD")
-    } finally spark.conf.unset(Clustering.CheckpointConf)
+    val ckpt = Clustering.propagateToFixpoint(edges)
+    ckpt.orderBy($"id").as[(Long, Long)].collect() shouldBe reference
+    val logical = ckpt.queryExecution.logical.toString
+    logical should not include "Join"
+    logical should include("LogicalRDD")
   }
 
   test("edge and contracted-edge row counts ride the materializations") {
@@ -79,8 +76,61 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
       "dedup_minhash_lsh_full" -> (2040L, 504L)).foreach { case (q, rows) =>
       SparkEntry.queries(q)(spark, sfDir) // the builder runs the fixpoint
       withClue(s"$q: ") {
-        (Clustering.lastEdgeRows, Clustering.lastContractedEdgeRows) shouldBe rows
+        val stats = Clustering.lastStats
+        (stats.edgeRows, stats.contractedEdgeRows) shouldBe rows
       }
     }
+  }
+
+  /** A path graph 0—1—…—n through buckets b_i = {i, i+1}. */
+  private def pathEdges(n: Long) = {
+    import spark.implicits._
+    (0L until n).flatMap(i => Seq((i, s"b$i"), (i + 1, s"b$i")))
+      .toDF("id", "bucket")
+  }
+
+  private def storedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("only the returned frame's checkpoint stays stored after the fixpoint") {
+    import spark.implicits._
+    // the edge caches and every superseded round are released in the
+    // call; the returned frame's own LogicalRDD blocks are all it keeps
+    val before = storedRdds
+    val out = Clustering.propagateToFixpoint(pathEdges(5))
+    val kept = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
+    kept should have size 1
+    (storedRdds -- before) shouldBe kept.toSet
+    // the released intermediates are not needed to read the result
+    out.select(countDistinct($"cluster"), count(lit(1))).as[(Long, Long)]
+      .head() shouldBe ((1L, 6L))
+    // a requireConverged throw releases everything it stored
+    val beforeThrow = storedRdds
+    intercept[RuntimeException] {
+      Clustering.propagateToFixpoint(pathEdges(11), maxIters = 3,
+        requireConverged = true)
+    }
+    (storedRdds -- beforeThrow) shouldBe empty
+  }
+
+  test("concurrent fixpoints return what they return one after the other") {
+    import spark.implicits._
+    // no state is shared across calls: two fixpoints over different
+    // edge sets on two threads give the same labels and stats as run
+    // sequentially, and the published record is one of the two whole
+    val a = pathEdges(7)
+    val b = Seq((10L, "x"), (11L, "x"), (11L, "y"), (12L, "y"), (20L, "z"))
+      .toDF("id", "bucket")
+    def run(e: org.apache.spark.sql.DataFrame) = {
+      val (labels, stats) = Clustering.fixpointWithStats(e)
+      (labels.orderBy($"id").as[(Long, Long)].collect().toSeq, stats)
+    }
+    val sequential = Seq(run(a), run(b))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val concurrent = Await.result(
+      Future.sequence(Seq(Future(run(a)), Future(run(b)))), 5.minutes)
+    concurrent shouldBe sequential
+    sequential.map(_._2) should contain(Clustering.lastStats)
   }
 }

@@ -807,11 +807,13 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("ann recall harness adds no pairwise stage beyond the tiers' own") {
-    // r20: the tier shortlists materialize ONCE through an eager
+    // r20: the tier shortlists materialize ONCE through a
     // localCheckpoint (the 561-Exchange union was referenced twice —
-    // hits + retrieved; VERDICT r19 next #2), so the harness plan is
-    // now id-sized scans of the checkpointed rows (ExistingRDD
-    // leaves). Each tier's own WindowGroupLimit-bounded top-k cut is
+    // hits + retrieved; VERDICT r19 next #2). It is `eager = false`,
+    // but under AQE it runs every shuffle stage of the tier pipelines
+    // while the builder runs and defers only the final stage. So the
+    // harness plan is id-sized scans of the checkpointed rows
+    // (ExistingRDD leaves). Each tier's own WindowGroupLimit-bounded top-k cut is
     // pinned by that tier's plan test above. Everything the harness
     // ADDS — the overlap semi-join, the per-tier counts, the possible
     // scalar — stays id-sized; no CartesianProduct anywhere.
