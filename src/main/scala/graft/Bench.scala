@@ -2,8 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
-  /** Bench hygiene, shared by every measuring main (Bench, PlanBatch,
-    * ScaleProbe): clearCache() drops CacheManager entries, and
+  /** Bench hygiene, shared by the three measuring mains (Bench,
+    * tools.Profile, ScaleProbe): clearCache() drops CacheManager entries, and
     * localCheckpoint blocks (registered as persistent RDDs, reclaimed
     * otherwise only after a driver GC) are unpersisted explicitly, so
     * storage pressure never bleeds into the next measurement (r14

@@ -129,11 +129,27 @@ object Tables {
     * planning overhead at 100 TB plan sizes), and on any frame AQE
     * wraps (an exchange or subquery in the tree) it would have gone
     * further and eagerly EXECUTED the query stages, discarding the
-    * results. Frames whose leaves are not all file scans (none exist
-    * today — every call site is scan/filter/project/union) are
+    * results. Frames whose leaves are not all file scans are
     * returned unchanged rather than probed: they already contain an
     * exchange or a local relation, so scan-stage parallelism is not
-    * theirs to fix. */
+    * theirs to fix.
+    *
+    * The estimate leaves out two inputs of Spark's own split sizing.
+    *  - The bytes-per-core term: Spark shrinks its split size below
+    *    maxPartitionBytes to total bytes / default parallelism on small
+    *    inputs. Leaving it out can only under-count Spark's partitions,
+    *    so the worst case is one round-robin repartition of an input
+    *    smaller than maxPartitionBytes × cores, never a missed one; and
+    *    on a one-row-group file Spark's extra byte splits read nothing,
+    *    which is the case this method exists for.
+    *  - Partition pruning: every file of the relation is counted, where
+    *    a pruned scan reads fewer. That could over-count and skip a
+    *    needed repartition, but every caller reads a table with no
+    *    partition columns (documents, customer), so nothing is pruned.
+    *
+    * A frame from [[table]] is a temp-view lookup, whose raw logical
+    * plan is an unresolved relation, not a file relation: such frames,
+    * which every caller passes today, are returned unchanged. */
   def parallelized(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val spark = df.sparkSession

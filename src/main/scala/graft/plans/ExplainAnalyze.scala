@@ -20,27 +20,32 @@ import org.apache.spark.sql.types.{LongType, IntegerType, StringType, StructFiel
   */
 object ExplainAnalyze {
   /** Execute `df` and return one row per (operator, metric):
-    * (op_id, operator, metric, value). op_id is a stable pre-order
-    * index into the final executed plan.
+    * (op_id, operator, metric, value), as [[operatorMetrics]] reads
+    * them off the plan that ran.
     */
   def analyze(spark: SparkSession, df: DataFrame): DataFrame = {
     // drive THIS DataFrame's own physical plan (df.count() would build
     // and execute a separate count plan, leaving these metrics at 0)
     df.queryExecution.toRdd.foreach(_ => ())
-    val plan = df.queryExecution.executedPlan
-    val rows = walk(plan).zipWithIndex.flatMap { case (p, i) =>
-      p.metrics.toSeq.sortBy(_._1).map { case (name, m) =>
-        Row(i, p.nodeName, name, m.value)
-      }
-    }
+    val rows = operatorMetrics(df.queryExecution.executedPlan).map(Row.fromTuple)
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
+      spark.sparkContext.parallelize(rows, 1),
       StructType(Seq(
         StructField("op_id", IntegerType, nullable = false),
         StructField("operator", StringType, nullable = false),
         StructField("metric", StringType, nullable = false),
         StructField("value", LongType, nullable = false))))
   }
+
+  /** One (op_id, operator, metric, value) tuple per metric of each
+    * operator of an executed `plan`. op_id is a stable pre-order index
+    * into the final executed plan. A plan that has not run reads 0. */
+  def operatorMetrics(plan: SparkPlan): Seq[(Int, String, String, Long)] =
+    walk(plan).zipWithIndex.flatMap { case (p, i) =>
+      p.metrics.toSeq.sortBy(_._1).map { case (name, m) =>
+        (i, p.nodeName, name, m.value)
+      }
+    }
 
   /** Pre-order walk that crosses the two boundaries `collect` stops
     * at: AQE's final plan and materialized query-stage subtrees. */

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, QueryGroup, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,6 +94,13 @@ object TextPipeline extends QueryGroup {
     }
   }
 
+  /** Frees the checkpoints `df` reads: each LogicalRDD leaf holds its
+    * stored RDD itself (`df.rdd` would be a fresh mapped RDD whose
+    * unpersist frees nothing). `df` must not be read afterwards. */
+  private def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+
   /** Merge rounds for pipeline_bpe_vocab — fixed so the DuckDB oracle
     * can unroll the identical rounds as a static CTE chain. */
   private val BpeRounds = 8
@@ -139,6 +147,14 @@ object TextPipeline extends QueryGroup {
     // about lazy persist being 2x slower was about UNBOUNDED chains
     // re-planned per consumer; the bounded 4-round window keeps the
     // flat-leaf property where it matters.
+    // Each cut supersedes the checkpoint below it, which no later round
+    // and no returned frame reads: free it once the eager successor
+    // has materialized.
+    def cut(): Unit = {
+      val superseded = vocab
+      vocab = vocab.localCheckpoint()
+      release(superseded)
+    }
     var sinceCkpt = 0
     for (r <- 1 to BpeRounds if !exhausted) {
       val pairs = vocab
@@ -172,12 +188,12 @@ object TextPipeline extends QueryGroup {
         vocab = vocab.withColumn("seq",
           replace($"seq", lit(s" $l  $rr "), lit(s" $l$rr ")))
         sinceCkpt += 1
-        if (sinceCkpt == 4) { vocab = vocab.localCheckpoint(); sinceCkpt = 0 }
+        if (sinceCkpt == 4) { cut(); sinceCkpt = 0 }
       }
     }
     // consumers (tokenize/encode/eval) fan out from the final vocab —
     // always hand them a flat checkpointed leaf
-    if (sinceCkpt != 0) vocab = vocab.localCheckpoint()
+    if (sinceCkpt != 0) cut()
     (merges.toSeq, vocab)
   }
 
@@ -426,10 +442,12 @@ object TextPipeline extends QueryGroup {
     * drop-to-zero is the fixed-round deterministic analog). Every
     * corpus word always retains ≥1 valid segmentation by induction:
     * its own round-r best pieces all survive into round r+1's vocab.
-    * Returns (final piece counts, final best segmentation, per-round
-    * raw unit frames for the margin audit). */
-  private[graft] def learnUnigram(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
+    * Returns (final piece counts, final best segmentation). `audit`
+    * sees each round's raw unit frame (seed, per round, final rescore)
+    * while the counts under it are still stored: each round's counts
+    * checkpoint is freed once the next one has materialized. */
+  private[graft] def learnUnigram(s: SparkSession, dir: String,
+      audit: DataFrame => Unit = _ => ()): (DataFrame, DataFrame) = {
     import s.implicits._
     // NOTE (optimization r19): eager localCheckpoint is deliberate
     // here — a lazy persist() was measured 2-3x SLOWER
@@ -440,18 +458,19 @@ object TextPipeline extends QueryGroup {
     // round keeps each level computed exactly once.
     val words = unigramWords(s, dir).localCheckpoint()
     var cnts = unigramSeedCounts(words).localCheckpoint()
-    val raws = Seq.newBuilder[DataFrame]
     for (_ <- 1 to UnigramRounds) {
-      raws += unigramRawUnits(cnts)
+      audit(unigramRawUnits(cnts))
+      val superseded = cnts
       cnts = unigramBestSeg(words, unigramUnits(cnts))
         .select($"freq", explode(split($"seg", " ")).as("piece"))
         .groupBy($"piece").agg(sum($"freq").as("cnt"))
         .localCheckpoint()
+      release(superseded)
     }
-    raws += unigramRawUnits(cnts)
+    audit(unigramRawUnits(cnts))
     // the final E-step (tokenize) stays LAZY: the vocab row never
     // pays for it
-    (cnts, unigramBestSeg(words, unigramUnits(cnts)), raws.result())
+    (cnts, unigramBestSeg(words, unigramUnits(cnts)))
   }
 
   /** The unigram oracle: v (word freq) and c0 (seed counts) feed
@@ -2002,8 +2021,9 @@ object TextPipeline extends QueryGroup {
     // vocab-sized pair-count aggregation plus a 1-row argmax
     // materialized to the driver (the Clustering fixpoint-scalar
     // precedent) and broadcast back as a literal into the next
-    // round's map-side replace. localCheckpoint after each round
-    // bounds lineage so round r never recomputes rounds 1..r-1. At
+    // round's map-side replace. A localCheckpoint every 4th round and
+    // once after the last bounds lineage, so no round recomputes the
+    // rounds before the last cut (see learnBpe). At
     // web scale the vocabulary is ~10^7 rows — each round is a small
     // aggregation, never a corpus pass.
     // Cross-engine exactness: the argmax tie-break is total
@@ -2019,7 +2039,9 @@ object TextPipeline extends QueryGroup {
     "pipeline_bpe_vocab" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val (merges, _) = learnBpe(s, dir)
+        val (merges, vocab) = learnBpe(s, dir)
+        // the merge table is already on the driver
+        release(vocab)
         merges
           .toDF("merge_round", "merge_left", "merge_right", "pair_count")
           .orderBy($"merge_round")
@@ -2139,7 +2161,7 @@ object TextPipeline extends QueryGroup {
     "pipeline_unigram_vocab" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val (cnts, _, _) = learnUnigram(s, dir)
+        val (cnts, _) = learnUnigram(s, dir)
         cnts.select($"piece", $"cnt").orderBy($"piece")
       },
       Some(unigramOracle(UnigramRounds))),
@@ -2152,7 +2174,7 @@ object TextPipeline extends QueryGroup {
     "pipeline_unigram_tokenize" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val (_, best, _) = learnUnigram(s, dir)
+        val (_, best) = learnUnigram(s, dir)
         best.select($"w", $"freq", $"seg", $"np".cast("long").as("n_pieces"))
           .orderBy($"w")
       },
@@ -2177,7 +2199,7 @@ object TextPipeline extends QueryGroup {
     "pipeline_unigram_encode" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val (_, best, _) = learnUnigram(s, dir)
+        val (_, best) = learnUnigram(s, dir)
         val segs = best.select($"w", split($"seg", " ").as("pieces"))
         Tables.parallelized(Tables.documents(s, dir))
           .select($"doc_id",
@@ -2226,7 +2248,7 @@ object TextPipeline extends QueryGroup {
       (s, dir) => {
         import s.implicits._
         val (_, bpeVocab) = learnBpe(s, dir)
-        val (_, uniBest, _) = learnUnigram(s, dir)
+        val (_, uniBest) = learnUnigram(s, dir)
         val b = bpeVocab.select(lit("bpe").as("tokenizer"), $"freq",
           size(expr("split(trim(seq), '  ')")).cast("long").as("np"))
         val u = uniBest.select(lit("unigram").as("tokenizer"), $"freq",

@@ -21,6 +21,19 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers {
     plan should include("GreaterThan(l_quantity")
   }
 
+  test("predicates reach the parquet scan through Tables.parallelized") {
+    val df = Tables.parallelized(Tables.lineitem(spark, sfDir))
+      .where("l_shipdate >= DATE '1994-01-01' AND l_quantity < 24")
+    // a repartition that parallelized inserts must not stop the filter;
+    // the formatted plan prints the pushed filters unabbreviated
+    val plan = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    val pushed = plan.split("\n").filter(_.contains("PushedFilters")).toSeq
+    pushed should have size 1
+    pushed.head should include("GreaterThanOrEqual(l_shipdate,1994-01-01")
+    pushed.head should include("LessThan(l_quantity,24")
+  }
+
   test("tpch_q3 broadcasts the customer dimension") {
     planOf("tpch_q3") should include("BroadcastHashJoin")
   }

@@ -14,19 +14,19 @@ import org.scalatest.matchers.should.Matchers
   * distance from the nearest .5 rounding boundary must dwarf the ≤1-ulp
   * cross-libm ln noise, which at |ln|≤16 scaled by 1e6 is ≲4e-9
   * absolute. The audited frames are the SAME private[graft] helper the
-  * shipped rounds quantize (learnUnigram's raw frames — the audit
+  * shipped rounds quantize (learnUnigram's audited raw frames — the audit
   * cannot drift from the gate).
   */
 class UnigramMarginSpec extends AnyFunSuite with SparkFixture with Matchers {
 
   test("micro-nat quantization sits clear of every .5 boundary, all rounds") {
     import spark.implicits._
-    val (_, _, raws) = graft.queries.TextPipeline.learnUnigram(spark, sfDir)
-    raws should have size 3 // seed + per-round + final rescore
-    val minMargin = raws.map { raw =>
-      raw.select(abs(($"raw" - floor($"raw")) - 0.5).as("m"))
-        .agg(min($"m")).head.getDouble(0)
-    }.min
+    val margins = Seq.newBuilder[Double]
+    graft.queries.TextPipeline.learnUnigram(spark, sfDir, raw =>
+      margins += raw.select(abs(($"raw" - floor($"raw")) - 0.5).as("m"))
+        .agg(min($"m")).head.getDouble(0))
+    margins.result() should have size 3 // seed + per-round + final rescore
+    val minMargin = margins.result().min
     info(f"min quantization margin across rounds: $minMargin%.3e")
     minMargin should be >= 1e-5
   }
@@ -37,7 +37,7 @@ class UnigramMarginSpec extends AnyFunSuite with SparkFixture with Matchers {
     // EVERY vocabulary entry — a dropped/overlapping piece in the
     // cut-mask enumeration would break this before any oracle ran
     import spark.implicits._
-    val (_, best, _) = graft.queries.TextPipeline.learnUnigram(spark, sfDir)
+    val (_, best) = graft.queries.TextPipeline.learnUnigram(spark, sfDir)
     val broken = best
       .filter(regexp_replace($"seg", " ", "") =!= $"w")
     broken.count() shouldBe 0L
