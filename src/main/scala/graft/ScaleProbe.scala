@@ -179,7 +179,8 @@ object ScaleProbe {
           Some(graft.queries.Clustering.lastStats) else None
         System.err.println(f"[scale-probe] $dir $name: $sec%.2f s, $rows rows" +
           fix.map(f => s", fixpoint rounds=${f.rounds} converged=${f.converged} " +
-            s"edges=${f.edgeRows} contracted=${f.contractedEdgeRows}")
+            s"edges=${f.edgeRows} contracted=${f.contractedEdgeRows} " +
+            s"fixpoint_path=${f.path}")
             .getOrElse(""))
         (name, sec, rows, fix)
       }
@@ -200,11 +201,13 @@ object ScaleProbe {
     def fmt(rs: Seq[(String, Double, Long, Option[FixpointStats])]): String =
       rs.map { case (n, s, rows, fix) =>
         // edge_rows vs contracted_edge_rows: the r20 label-graph
-        // contraction's scale evidence — tail rounds iterate on the
-        // contracted cluster graph, whose row count this records
+        // contraction's scale evidence — the finish works on the
+        // contracted cluster graph, whose row count this records, on
+        // the driver or distributed (fixpoint_path)
         val fixJson = fix.map(f =>
           s""","fixpoint_rounds":${f.rounds},"converged":${f.converged},""" +
-            s""""edge_rows":${f.edgeRows},"contracted_edge_rows":${f.contractedEdgeRows}""").getOrElse("")
+            s""""edge_rows":${f.edgeRows},"contracted_edge_rows":${f.contractedEdgeRows},""" +
+            s""""fixpoint_path":"${f.path}"""").getOrElse("")
         f""""$n":{"sec":$s%.3f,"rows":$rows$fixJson}"""
       }.mkString("{", ",", "}")
 

@@ -94,12 +94,16 @@ object TextPipeline extends QueryGroup {
     }
   }
 
-  /** Frees the checkpoints `df` reads: each LogicalRDD leaf holds its
-    * stored RDD itself (`df.rdd` would be a fresh mapped RDD whose
-    * unpersist frees nothing). `df` must not be read afterwards. */
-  private def release(df: DataFrame): Unit =
-    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = false))
+  /** Frees the checkpoints `df` reads, except those any of `keep`
+    * reads: each LogicalRDD leaf holds its stored RDD itself (`df.rdd`
+    * would be a fresh mapped RDD whose unpersist frees nothing). `df`
+    * must not be read afterwards. */
+  private def release(df: DataFrame, keep: DataFrame*): Unit = {
+    def stored(f: DataFrame) =
+      f.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+    val kept = keep.flatMap(stored).map(_.id).toSet
+    stored(df).filterNot(r => kept(r.id)).foreach(_.unpersist(blocking = false))
+  }
 
   /** Merge rounds for pipeline_bpe_vocab — fixed so the DuckDB oracle
     * can unroll the identical rounds as a static CTE chain. */
@@ -604,7 +608,9 @@ object TextPipeline extends QueryGroup {
     * ScaleProbe FixpointQueries). requireConverged (r17; ADVICE r16
     * #1): the no-contamination guarantee is only as good as the
     * fixpoint — fail loudly if the valve is hit, never return a
-    * split that might leak. */
+    * split that might leak. Both apply to the distributed finish
+    * only: below the contracted-graph bound the fixpoint finishes
+    * exactly on the driver and the valve does not apply. */
   private def neardupClusterAssignment(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Clustering.propagateToFixpoint(neardupBucketEdges(s, dir),
@@ -703,7 +709,9 @@ object TextPipeline extends QueryGroup {
     // fail loudly instead (the leakage-split valve discipline). The
     // star graph can chain deeper than raw bucket stars (hubs link
     // through shared members), so the valve sits well above the
-    // measured round counts (5/9/13 at 1×/10×/100×).
+    // measured round counts (5/9/13 at 1×/10×/100×). Below the
+    // contracted-graph bound the finish is exact, on the driver, and
+    // the valve does not apply.
     Clustering.propagateToFixpoint(edges, maxIters = 20,
       requireConverged = true).select($"id", $"cluster")
   }
@@ -1353,7 +1361,10 @@ object TextPipeline extends QueryGroup {
         // index) and the (id, cluster) assignment the fixpoint
         // derives FROM the written buckets — so the 64-minhash
         // signature pass runs once and both consumers serve from
-        // parquet
+        // parquet. The fixpoint keeps the inline row's valve
+        // (maxIters = 15, requireConverged), which governs only the
+        // distributed finish: below the contracted-graph bound the
+        // finish is exact, on the driver, and the valve does not apply.
         neardupBucketEdges(s, dir)
           .write.mode("overwrite").parquet(s"$pfx/buckets")
         Clustering.propagateToFixpoint(s.read.parquet(s"$pfx/buckets"),
@@ -2161,7 +2172,9 @@ object TextPipeline extends QueryGroup {
     "pipeline_unigram_vocab" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val (cnts, _) = learnUnigram(s, dir)
+        val (cnts, best) = learnUnigram(s, dir)
+        // the discarded final E-step alone reads the `words` checkpoint
+        release(best, cnts)
         cnts.select($"piece", $"cnt").orderBy($"piece")
       },
       Some(unigramOracle(UnigramRounds))),

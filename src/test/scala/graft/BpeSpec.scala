@@ -38,11 +38,15 @@ class BpeSpec extends AnyFunSuite with SparkFixture with Matchers {
 
   test("a BPE row leaves stored only the checkpoints its returned frame reads") {
     // learnBpe frees each superseded vocab checkpoint in the call (and
-    // learnUnigram each superseded count checkpoint), and the merge
-    // table row frees the vocab it has already collected
+    // learnUnigram each superseded count checkpoint), the merge table
+    // row frees the vocab it has already collected, and the unigram
+    // vocab row frees the word checkpoint only its discarded final
+    // E-step reads
     def stored = spark.sparkContext.getPersistentRDDs.keySet.toSet
     for (name <- Seq("pipeline_bpe_vocab", "pipeline_bpe_tokenize",
-        "pipeline_bpe_encode", "pipeline_tokenizer_eval")) {
+        "pipeline_bpe_encode", "pipeline_tokenizer_eval",
+        "pipeline_unigram_vocab", "pipeline_unigram_tokenize",
+        "pipeline_unigram_encode")) {
       val before = stored
       val out = SparkEntry.queries(name)(spark, sfDir)
       val read = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }

@@ -69,8 +69,10 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("edge and contracted-edge row counts ride the materializations") {
-    // observe() row counts on the two edge caches replaced two count()
-    // actions (two jobs each under AQE); the values must not move.
+    // the edge count is observed on the edge cache; the contracted
+    // count is the rows the driver finish collects (observed on the
+    // contracted edge cache on the distributed finish, which the
+    // both-finishes case below compares); the values must not move.
     // sf0.1 gives 16024 / 2033 and 19246 / 5016 for the same two rows.
     Seq("sim_embed_neardup_full" -> (4024L, 1681L),
       "dedup_minhash_lsh_full" -> (2040L, 504L)).foreach { case (q, rows) =>
@@ -103,13 +105,76 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
     // the released intermediates are not needed to read the result
     out.select(countDistinct($"cluster"), count(lit(1))).as[(Long, Long)]
       .head() shouldBe ((1L, 6L))
-    // a requireConverged throw releases everything it stored
+    // a requireConverged throw (distributed finish only) releases
+    // everything it stored
     val beforeThrow = storedRdds
-    intercept[RuntimeException] {
-      Clustering.propagateToFixpoint(pathEdges(11), maxIters = 3,
-        requireConverged = true)
+    withDistributedFixpoint {
+      intercept[RuntimeException] {
+        Clustering.propagateToFixpoint(pathEdges(11), maxIters = 3,
+          requireConverged = true)
+      }
     }
     (storedRdds -- beforeThrow) shouldBe empty
+  }
+
+  /** The labels and stats of one call on the default finish and one
+    * with the threshold at -1, after checking that they agree. */
+  private def bothFinishes(edges: org.apache.spark.sql.DataFrame,
+      maxIters: Int): Seq[Clustering.FixpointStats] = {
+    import spark.implicits._
+    def run() = {
+      val (labels, stats) = Clustering.fixpointWithStats(edges, maxIters)
+      (labels.schema, labels.orderBy($"id").as[(Long, Long)].collect().toSeq, stats)
+    }
+    val (dSchema, dLabels, d) = run()
+    val (sSchema, sLabels, s) = withDistributedFixpoint(run())
+    dLabels shouldBe sLabels
+    dSchema shouldBe sSchema
+    (d.edgeRows, d.contractedEdgeRows) shouldBe ((s.edgeRows, s.contractedEdgeRows))
+    (d.path, s.path) shouldBe ((Clustering.DriverPath, Clustering.DistributedPath))
+    Seq(d, s).map(_.converged) shouldBe Seq(true, true)
+    Seq(d, s)
+  }
+
+  test("the driver and the distributed finish agree on every fixture") {
+    import spark.implicits._
+    val fixtures = Seq(
+      Seq((1L, "b1"), (5L, "b1"), (5L, "b2"), (9L, "b2")),
+      Seq((1L, "a"), (2L, "a"), (7L, "z"), (8L, "z"), (3L, "solo")),
+      Seq((1L, "b1"), (5L, "b1")),
+      (1 to 5).flatMap(i => Seq((i.toLong, s"e$i"), ((i + 1).toLong, s"e$i"))),
+      Seq((10L, "x"), (11L, "x"), (11L, "y"), (12L, "y"), (20L, "z"))
+    ).map(_.toDF("id", "bucket")) ++ Seq(5L, 7L, 11L).map(pathEdges)
+    // a 41-node path leaves a 38-node contracted path: 37 rounds to
+    // settle, then one double round to see the sum stand still
+    for ((edges, i) <- fixtures.zipWithIndex) withClue(s"fixture $i: ") {
+      bothFinishes(edges, maxIters = 25)
+    }
+    val Seq(driver, distributed) = bothFinishes(pathEdges(40), maxIters = 25)
+    (driver.rounds, distributed.rounds) shouldBe ((3, 6 + 2 * 18))
+  }
+
+  test("the driver and the distributed finish agree on the sf0.001 fixpoint rows") {
+    // the five rows that run the fixpoint in their builder, and
+    // pipeline_incremental_dedup, which reads the bucket table the
+    // materialized split writes (its output only)
+    val fixpointRows = Seq("dedup_minhash_lsh_full", "dedup_lsh_recall_verified",
+      "sim_embed_neardup_full", "pipeline_leakage_split",
+      "pipeline_leakage_split_materialized")
+    for (q <- fixpointRows :+ "pipeline_incremental_dedup") withClue(s"$q: ") {
+      def run() = {
+        val rows = SparkEntry.queries(q)(spark, sfDir).collect().toSeq
+        (rows.sortBy(_.toString), Clustering.lastStats)
+      }
+      val (dRows, d) = run()
+      val (sRows, s) = withDistributedFixpoint(run())
+      dRows should not be empty
+      dRows shouldBe sRows
+      if (fixpointRows.contains(q)) {
+        (d.edgeRows, d.contractedEdgeRows) shouldBe ((s.edgeRows, s.contractedEdgeRows))
+        (d.path, s.path) shouldBe ((Clustering.DriverPath, Clustering.DistributedPath))
+      }
+    }
   }
 
   test("concurrent fixpoints return what they return one after the other") {

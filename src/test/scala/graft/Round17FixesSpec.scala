@@ -63,18 +63,27 @@ class Round17FixesSpec extends AnyFunSuite with SparkFixture with Matchers {
     val edges = (0L until 11L).flatMap(i =>
         Seq((i, s"b$i"), (i + 1, s"b$i")))
       .toDF("id", "bucket")
-    val ex = intercept[RuntimeException] {
-      graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 3,
-        requireConverged = true)
+    // the valve guards the distributed finish, which the threshold at
+    // -1 forces; below the bound the driver finish is exact (last check)
+    withDistributedFixpoint {
+      val ex = intercept[RuntimeException] {
+        graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 3,
+          requireConverged = true)
+      }
+      ex.getMessage should include("non-converged")
+      // the same valve without the flag returns the partial labels
+      // (dedup semantics: under-merge, never error)
+      graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 3)
+        .count() shouldBe 12L
+      // and with headroom the path converges and the flag passes
+      graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 10,
+          requireConverged = true)
+        .select(countDistinct($"cluster")).head().getLong(0) shouldBe 1L
     }
-    ex.getMessage should include("non-converged")
-    // the same valve without the flag returns the partial labels
-    // (dedup semantics: under-merge, never error)
-    graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 3)
-      .count() shouldBe 12L
-    // and with headroom the path converges and the flag passes
-    graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 10,
+    // the default (driver) finish returns the exact components of the
+    // same path at the same maxIters = 3, and the flag passes
+    graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 3,
         requireConverged = true)
-      .select(countDistinct($"cluster")).head().getLong(0) shouldBe 1L
+      .as[(Long, Long)].collect().sorted shouldBe (0L to 11L).map(_ -> 0L).toArray
   }
 }
