@@ -203,7 +203,8 @@ object ScaleProbe {
         // edge_rows vs contracted_edge_rows: the r20 label-graph
         // contraction's scale evidence — the finish works on the
         // contracted cluster graph, whose row count this records, on
-        // the driver or distributed (fixpoint_path)
+        // the driver or distributed, or on the whole edge list when
+        // that fits the driver (fixpoint_path)
         val fixJson = fix.map(f =>
           s""","fixpoint_rounds":${f.rounds},"converged":${f.converged},""" +
             s""""edge_rows":${f.edgeRows},"contracted_edge_rows":${f.contractedEdgeRows},""" +

@@ -107,70 +107,6 @@ object Tables {
       case None => spark.read.parquet(path)
     }
 
-  /** Scale-adaptive scan parallelization (optimization r19; guide §2.5
-    * "input skew — one huge unsplittable file ... repartition
-    * immediately after the read"): the driver's testdata ships ONE
-    * parquet row group per table, so every scan plans as a single
-    * task and any heavy per-row compute fused into the scan stage
-    * (minhash signatures, shingle hashing, all-pairs scoring legs)
-    * serializes on one core while the rest idle. When the plan's scan
-    * yields fewer partitions than the session's parallelism, insert a
-    * round-robin repartition (deterministic: sortBeforeRepartition is
-    * on); when the table is laid out properly (scan partitions ≥
-    * cores — any real cluster table) this is a NO-OP, so no shuffle
-    * is ever added at scale.
-    *
-    * Optimization r20 (VERDICT r19 next #7 + ADVICE r19 #1): the
-    * partition count is ESTIMATED from the logical scan's file index
-    * (total bytes + per-file open cost, packed into maxPartitionBytes
-    * splits — the quantities FilePartition itself packs by), not read
-    * off `queryExecution.toRdd`. The toRdd probe physically planned
-    * the subtree a second time at every call site (~24 of them — pure
-    * planning overhead at 100 TB plan sizes), and on any frame AQE
-    * wraps (an exchange or subquery in the tree) it would have gone
-    * further and eagerly EXECUTED the query stages, discarding the
-    * results. Frames whose leaves are not all file scans are
-    * returned unchanged rather than probed: they already contain an
-    * exchange or a local relation, so scan-stage parallelism is not
-    * theirs to fix.
-    *
-    * The estimate leaves out two inputs of Spark's own split sizing.
-    *  - The bytes-per-core term: Spark shrinks its split size below
-    *    maxPartitionBytes to total bytes / default parallelism on small
-    *    inputs. Leaving it out can only under-count Spark's partitions,
-    *    so the worst case is one round-robin repartition of an input
-    *    smaller than maxPartitionBytes × cores, never a missed one; and
-    *    on a one-row-group file Spark's extra byte splits read nothing,
-    *    which is the case this method exists for.
-    *  - Partition pruning: every file of the relation is counted, where
-    *    a pruned scan reads fewer. That could over-count and skip a
-    *    needed repartition, but every caller reads a table with no
-    *    partition columns (documents, customer), so nothing is pruned.
-    *
-    * A frame from [[table]] is a temp-view lookup, whose raw logical
-    * plan is an unresolved relation, not a file relation: such frames,
-    * which every caller passes today, are returned unchanged. */
-  def parallelized(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    val conf = spark.sessionState.conf
-    val leaves = df.queryExecution.logical.collectLeaves()
-    val fileRelations = leaves.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation]
-    }
-    if (fileRelations.size != leaves.size || fileRelations.isEmpty) return df
-    val maxSplit = conf.filesMaxPartitionBytes
-    val openCost = conf.filesOpenCostInBytes
-    val parts = fileRelations.map { fs =>
-      val costed =
-        fs.location.sizeInBytes + fs.location.inputFiles.length * openCost
-      math.max(1L, (costed + maxSplit - 1) / maxSplit)
-    }.sum
-    if (parts >= target) df else df.repartition(target)
-  }
-
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")
@@ -193,16 +129,15 @@ object Tables {
     * TABLE_OR_VIEW_NOT_FOUND — scoped to that query alone.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
-    // NOTE (optimization r19): wrapping these views in [[parallelized]]
-    // was MEASURED and REJECTED — twice (all tables, then fact-sized
-    // only). Isolated single-pipeline rows improved (tpcds_q67
+    // NOTE (optimization r19): wrapping these views in a round-robin
+    // repartition up to the session's parallelism was MEASURED and
+    // REJECTED — twice (all tables, then fact-sized only). Isolated
+    // single-pipeline rows improved (tpcds_q67
     // 1.93→1.27 s: the scan-fused ROLLUP ran 32-way), but the full
     // suite regressed ~+20 s because every one of the 64 SQL rows pays
     // one extra exchange + AQE stage per fact reference, and the
     // multi-reference queries (q23/q14/q39) pay it per scan branch
     // (branch-specific pushed filters defeat exchange reuse).
-    // Scan-stage parallelization stays a per-call-site decision where
-    // per-row compute dominates (see the [[parallelized]] call sites).
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { n =>
       try table(spark, dir, n).createOrReplaceTempView(n)

@@ -24,26 +24,31 @@ import scala.jdk.CollectionConverters._
   * bucket). Each round is two hash shuffles (groupBy bucket, groupBy
   * id) — O(edges), never quadratic.
   *
-  * A call has two parts:
-  *  1. The full graph. The edges are checkpointed twice (hash-
-  *     partitioned by id and by bucket), then one action runs three
-  *     rounds and checkpoints the labels. That collapses every star, so
-  *     what is left only needs the contracted graph: each edge as
-  *     (cluster(id), bucket), deduped.
-  *  2. The finish, one of two ([[FixpointStats.path]]):
-  *     - `driver`: when the contracted graph has at most
-  *       [[driverBound]] rows, the rows are collected and union-find
-  *       gives each cluster its component minimum — exact, always
-  *       converged, no further round;
+  * A call contracts the graph until it fits on the driver, at two
+  * levels. Each level checkpoints its graph hash-partitioned by id,
+  * with the row count observed on that action, and collects the
+  * checkpoint when the count is at most [[driverBound]]; above the
+  * bound nothing is read. The finish that ran is
+  * [[FixpointStats.path]]:
+  *  1. `whole-graph`: the edge list itself fits. Union-find over the
+  *     collected edges gives every id its component minimum — exact,
+  *     no round, 3 actions (the checkpoint, the collect, the output).
+  *  2. Otherwise the edges are checkpointed by bucket too, and one
+  *     action runs three rounds and checkpoints the labels. That
+  *     collapses every star, so what is left only needs the contracted
+  *     graph: each edge as (cluster(id), bucket), deduped. A cluster →
+  *     component-minimum map is joined onto the labels, and the result
+  *     checkpointed. The map comes from one of two finishes:
+  *     - `contracted-driver`: the contracted graph fits, and union-find
+  *       over its collected rows gives the map — exact, no further
+  *       round;
   *     - `distributed`: above the bound, propagation iterates on the
-  *       contracted graph, two rounds per action. Labels only decrease,
-  *       so the label sum is stationary exactly at the fixpoint, and
-  *       convergence costs one sum per double round, observed on the
-  *       action that materializes it. Chain diameter bounds the round
-  *       count; `maxIters` is a safety valve.
-  *
-  *     Either way, a cluster → component-minimum map is joined onto the
-  *     labels and the result checkpointed.
+  *       contracted graph from its by-id checkpoint, two rounds per
+  *       action. Labels only decrease, so the label sum is stationary
+  *       exactly at the fixpoint, and convergence costs one sum per
+  *       double round, observed on the action that materializes it.
+  *       Chain diameter bounds the round count; `maxIters` is a safety
+  *       valve.
   *
   * Reference semantics: presto-ads has no clustering operator — this is
   * the dedup completion the 100 TB pipeline needs (VERDICT r2 §3).
@@ -59,13 +64,16 @@ import scala.jdk.CollectionConverters._
 object Clustering {
 
   /** [[FixpointStats.path]] values: the finish that ran. */
-  val DriverPath = "driver"
+  val WholeGraphPath = "whole-graph"
+  val ContractedPath = "contracted-driver"
   val DistributedPath = "distributed"
 
-  /** What one fixpoint run did: the propagation rounds, whether the
-    * labels settled (always on the driver path; within `maxIters` on
-    * the distributed one), the rows of the edge list vs the contracted
-    * cluster graph the finish works on, and which finish ran. */
+  /** What one fixpoint run did: the propagation rounds (0 on the
+    * whole-graph finish, which runs none), whether the labels settled
+    * (always on the two driver finishes; within `maxIters` on the
+    * distributed one), the rows of the edge list vs the graph the
+    * finish works on (the contracted cluster graph, or the edge list
+    * itself on the whole-graph finish), and which finish ran. */
   final case class FixpointStats(rounds: Int, converged: Boolean,
       edgeRows: Long, contractedEdgeRows: Long, path: String)
 
@@ -111,30 +119,31 @@ object Clustering {
     (1 to rounds).foldLeft(init)((l, _) => propagateRound(edges, l))
   }
 
-  /** The most contracted rows the driver finish takes:
-    * `spark.sql.autoBroadcastJoinThreshold` over the contracted schema's
-    * per-row size estimate. The finish broadcasts a map of that many
+  /** The most (id, bucket) rows a driver finish takes:
+    * `spark.sql.autoBroadcastJoinThreshold` over the graph's per-row
+    * size estimate. The contracted finish broadcasts a map of that many
     * rows, so this is the size Spark already accepts for a broadcast.
-    * 0 (always distributed) when the threshold is ≤ 0, or unless the
+    * -1 (always distributed) when the threshold is ≤ 0, or unless the
     * ids are bigint and the buckets strings or integers: the driver
     * keys ids as longs and buckets by value equality, which agree with
     * Spark's grouping for those types. */
-  private def driverBound(contracted: DataFrame): Long = {
+  private def driverBound(graph: DataFrame): Long = {
     val threshold =
-      contracted.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val schema = contracted.schema
+      graph.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val schema = graph.schema
     val keyed = schema("id").dataType == LongType &&
       Set[DataType](StringType, LongType, IntegerType)(schema("bucket").dataType)
-    if (threshold <= 0 || !keyed) 0L
+    if (threshold <= 0 || !keyed) -1L
     else (BigInt(threshold) /
-      EstimationUtils.getSizePerRow(contracted.queryExecution.analyzed.output))
+      EstimationUtils.getSizePerRow(graph.queryExecution.analyzed.output))
       .min(Int.MaxValue - 1).toLong
   }
 
-  /** A (cluster, component minimum) row for every id of the contracted
-    * (id, bucket) rows, by union-find over ids that share a bucket. The
-    * smaller root wins each union, so every root is its component's
-    * minimum id. */
+  /** A (id, component minimum) row for every id of the (id, bucket)
+    * rows, by union-find over ids that share a bucket. The smaller root
+    * wins each union, so every root is its component's minimum id.
+    * Rows with a null id or bucket are skipped, as the distributed
+    * rounds' inner joins drop them. */
   private def componentMinima(rows: Array[Row]): Seq[Row] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
@@ -143,7 +152,7 @@ object Clustering {
       r
     }
     val firstOfBucket = scala.collection.mutable.HashMap.empty[Any, Long]
-    for (row <- rows) {
+    for (row <- rows if !row.isNullAt(0) && !row.isNullAt(1)) {
       val id = row.getLong(0)
       parent.getOrElseUpdate(id, id)
       firstOfBucket.get(row.get(1)) match {
@@ -161,7 +170,7 @@ object Clustering {
     * localCheckpoint leaf that stays stored for the caller's actions.
     *
     * `maxIters` and `requireConverged` govern only the distributed
-    * finish; below [[driverBound]] the driver finish is exact and
+    * finish; below [[driverBound]] a driver finish is exact and
     * neither applies.
     *
     * `requireConverged` (r17; ADVICE r16 #1): when true, hitting the
@@ -209,24 +218,32 @@ object Clustering {
       (m, obs.get("v").asInstanceOf[Long])
     }
     // Optimization r19 (guide §2.4 — two operations keyed the same way
-    // share one exchange): the edge table is hash-partitioned ONCE on
-    // each of its two join keys and checkpointed — a flat leaf that
-    // keeps its hash partitioning — so no fixpoint round ever
-    // re-shuffles it: each round's two joins run exchange-free on the
-    // edge side and only the label-sized aggregate streams move.
+    // share one exchange): each graph is hash-partitioned ONCE on each
+    // of its two join keys and checkpointed — a flat leaf that keeps
+    // its hash partitioning — so no fixpoint round ever re-shuffles
+    // it: each round's two joins run exchange-free on the edge side and
+    // only the label-sized aggregate streams move. The by-id copy
+    // observes the graph's row count, which decides the finish; the
+    // by-bucket copy is made only when rounds run on the graph.
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def partitioned(e: DataFrame): (DataFrame, DataFrame, Long) = {
-      val (byId, rows) = observed(e.repartition(nParts, $"id"), count(lit(1)))
-      (byId, intermediate(byId.repartition(nParts, $"bucket")), rows)
-    }
+    def byId(g: DataFrame): (DataFrame, Long) =
+      observed(g.repartition(nParts, $"id"), count(lit(1)))
+    def byBucket(gById: DataFrame): DataFrame =
+      intermediate(gById.repartition(nParts, $"bucket"))
+    // the rows of a graph checkpointed by id, when they fit
+    // [[driverBound]]; above it nothing is read
+    def onDriver(gById: DataFrame, rows: Long): Option[Array[Row]] =
+      if (rows > driverBound(gById)) None
+      else { actions += 1; Some(gById.collect()) }
     // convergence sum rides the materializing action as an observed
     // metric — one job materializes the round AND yields the sum
     def sumOnce(df: DataFrame): (DataFrame, Long) = observed(df, sum($"cluster"))
     // the distributed finish: propagation on the contracted graph until
     // the label sum settles or maxIters; returns (cluster, cmin) and
     // the call's stats
-    def distributed(contracted: DataFrame, edgeRows: Long): (DataFrame, FixpointStats) = {
-      val (cById, cByBucket, contractedRows) = partitioned(contracted)
+    def distributed(cById: DataFrame, contractedRows: Long,
+        edgeRows: Long): (DataFrame, FixpointStats) = {
+      val cByBucket = byBucket(cById)
       val cRound = round(cById, cByBucket) _
       // contracted folded init + double round, as on the full graph
       var (cLabels, prevSum) = sumOnce(cRound(cRound(foldedInit(cByBucket))))
@@ -252,11 +269,14 @@ object Clustering {
         FixpointStats(6 + 2 * (it - 1), converged, edgeRows, contractedRows,
           DistributedPath))
     }
-    try {
-      val (eById, eByBucket, edgeRows) =
-        partitioned(edges.select($"id", $"bucket"))
+    // the contracted graph's finish: the full graph's first action runs
+    // three rounds, then the contracted graph finishes on the driver or
+    // distributed; returns the (id, cluster) result, not yet
+    // materialized, and the call's stats
+    def contractedFinish(eById: DataFrame, edgeRows: Long): (DataFrame, FixpointStats) = {
+      val eByBucket = byBucket(eById)
       val fullRound = round(eById, eByBucket) _
-      // the FIRST action runs three rounds (the folded init + one double
+      // the first action runs three rounds (the folded init + one double
       // round): measured components converge in 5-7 rounds, so a deeper
       // first plan saves one whole action — the per-action latency
       // (stage scheduling + checkpoint materialization + convergence
@@ -273,38 +293,43 @@ object Clustering {
       // original components' minima. At scale the finish works on
       // ~|components| rows instead of the corpus (contractedEdgeRows vs
       // edgeRows records the ratio for the scale probes).
-      val contracted = eById.join(labels.hint("shuffle_hash"), "id")
-        .select($"cluster".as("id"), $"bucket").distinct()
-      // the driver finish (Presto's SINGLE-distribution final stage):
-      // once the contracted graph fits a broadcast, every further
-      // action would pay the per-action floor on a few thousand rows.
-      // Reading at most bound + 1 rows tells whether it fits, with no
-      // separate count action; above the bound the read is discarded.
-      val bound = driverBound(contracted)
-      val small = if (bound <= 0) None else {
-        actions += 1
-        Some(contracted.limit(bound.toInt + 1).collect())
-          .filter(_.length <= bound)
-      }
-      val (minima, stats) = small match {
+      val (cById, contractedRows) = byId(eById.join(labels.hint("shuffle_hash"), "id")
+        .select($"cluster".as("id"), $"bucket").distinct())
+      val (minima, stats) = onDriver(cById, contractedRows) match {
         case Some(rows) =>
           // nullable columns, as the distributed finish's min() gives
           val map = spark.createDataFrame(componentMinima(rows).asJava,
             StructType(Seq(StructField("cluster", LongType), StructField("cmin", LongType))))
           (map.hint("broadcast"),
-            FixpointStats(3, converged = true, edgeRows, rows.length.toLong,
-              DriverPath))
-        case None => distributed(contracted, edgeRows)
+            FixpointStats(3, converged = true, edgeRows, contractedRows, ContractedPath))
+        case None => distributed(cById, contractedRows, edgeRows)
+      }
+      // re-attach the component minima to the full id set: each id's
+      // post-star label maps to its component minimum
+      (labels.join(minima, "cluster").select($"id", $"cmin".as("cluster")), stats)
+    }
+    try {
+      val (eById, edgeRows) = byId(edges.select($"id", $"bucket"))
+      // the whole-graph finish (Presto's SINGLE-distribution final
+      // stage): when the edge list itself fits a broadcast, every
+      // round would pay the per-action floor on a few thousand rows,
+      // so union-find over the collected edges gives every id its
+      // component minimum at once
+      val (result, stats) = onDriver(eById, edgeRows) match {
+        case Some(rows) =>
+          // the other finishes' schema: the input's id field and a
+          // nullable cluster, as their min() gives
+          (spark.createDataFrame(componentMinima(rows).asJava,
+            StructType(Seq(eById.schema("id"), StructField("cluster", LongType)))),
+            FixpointStats(0, converged = true, edgeRows, edgeRows, WholeGraphPath))
+        case None => contractedFinish(eById, edgeRows)
       }
       lastStats = stats
       if (requireConverged && !stats.converged)
         sys.error(s"label propagation still moving after maxIters=$maxIters " +
           "rounds — refusing to return a non-converged clustering " +
           "(requireConverged=true)")
-      // re-attach the component minima to the full id set: each id's
-      // post-star label maps to its component minimum
-      val out = labels.join(minima, "cluster")
-        .select($"id", $"cmin".as("cluster")).localCheckpoint(eager = true)
+      val out = result.localCheckpoint(eager = true)
       actions += 1
       System.err.println(
         s"[clustering] fixpoint after ${stats.rounds} rounds " +

@@ -352,7 +352,7 @@ object Similarity extends QueryGroup {
     // Values are identical: tf/df counts over the surviving terms are
     // the same integers, and avg(dl) sums integer-valued doubles —
     // exact below 2^53 in any order.
-    val toksDf = Tables.parallelized(graft.Tables.documents(s, dir))
+    val toksDf = Tables.documents(s, dir)
       .select($"doc_id",
         split(regexp_replace(trim(lower($"text")), "\\s+", " "), " ")
           .as("toks"))
@@ -1261,7 +1261,7 @@ object Similarity extends QueryGroup {
             """transform(sequence(1, length(nm)), i ->
               |concat(substring(nm, 1, i - 1),
               |  substring(nm, i + 1, length(nm))))""".stripMargin)))
-        val names = graft.Tables.parallelized(Tables.customer(s, dir))
+        val names = Tables.customer(s, dir)
           .select($"c_custkey".as("id"), $"c_name".as("nm"))
         val refIdx = names
           .select($"id", $"nm", explode(delVariants($"nm")).as("v"))

@@ -44,7 +44,7 @@ object TextPipeline extends QueryGroup {
     * frozen-corpus specs hash-verify. */
   private def stemDictFrame(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.parallelized(Tables.documents(s, dir))
+    Tables.documents(s, dir)
       .select(explode(split(lower($"text"), "[^a-z]+")).as("tok"))
       .filter(length($"tok") >= 3)
       .distinct()
@@ -609,8 +609,9 @@ object TextPipeline extends QueryGroup {
     * #1): the no-contamination guarantee is only as good as the
     * fixpoint — fail loudly if the valve is hit, never return a
     * split that might leak. Both apply to the distributed finish
-    * only: below the contracted-graph bound the fixpoint finishes
-    * exactly on the driver and the valve does not apply. */
+    * only: when the edge list or the contracted graph fits the driver
+    * bound the fixpoint finishes exactly on the driver and the valve
+    * does not apply. */
   private def neardupClusterAssignment(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Clustering.propagateToFixpoint(neardupBucketEdges(s, dir),
@@ -626,7 +627,7 @@ object TextPipeline extends QueryGroup {
     * ~2× the row). */
   private def neardupBucketEdges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.parallelized(Tables.documents(s, dir))
+    Tables.documents(s, dir)
       .select($"doc_id", PortableLsh.wordBaseHashes($"text").as("x"))
       .select($"doc_id", PortableLsh.minhashArray($"x").as("m"))
       .select($"doc_id".as("id"),
@@ -687,7 +688,7 @@ object TextPipeline extends QueryGroup {
     // and the whole edge pipeline materializes once anyway inside
     // the fixpoint's eager edge checkpoint. The persist only added
     // an InMemoryRelation layer to every downstream plan.
-    val mh = Tables.parallelized(docs)
+    val mh = docs
       .select($"doc_id", PortableLsh.wordBaseHashes($"text").as("x"))
       .select($"doc_id", PortableLsh.minhashArray($"x").as("m"))
     val cand = mh.select($"doc_id".as("id"), $"m",
@@ -709,9 +710,9 @@ object TextPipeline extends QueryGroup {
     // fail loudly instead (the leakage-split valve discipline). The
     // star graph can chain deeper than raw bucket stars (hubs link
     // through shared members), so the valve sits well above the
-    // measured round counts (5/9/13 at 1×/10×/100×). Below the
-    // contracted-graph bound the finish is exact, on the driver, and
-    // the valve does not apply.
+    // measured round counts (5/9/13 at 1×/10×/100×). When the edge
+    // list or the contracted graph fits the driver bound the finish is
+    // exact, on the driver, and the valve does not apply.
     Clustering.propagateToFixpoint(edges, maxIters = 20,
       requireConverged = true).select($"id", $"cluster")
   }
@@ -794,8 +795,7 @@ object TextPipeline extends QueryGroup {
   private def lshBandingRecall(s: SparkSession, dir: String,
       rowsPerBand: Int): DataFrame = {
     import s.implicits._
-    val docs = Tables.parallelized(
-      Tables.documents(s, dir).filter($"doc_id" < 500))
+    val docs = Tables.documents(s, dir).filter($"doc_id" < 500)
     val buckets = docs
       .select($"doc_id", PortableLsh.wordBaseHashes($"text").as("x"))
       .select($"doc_id", PortableLsh.minhashArray($"x").as("m"))
@@ -915,7 +915,7 @@ object TextPipeline extends QueryGroup {
     "text_stem_terms" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        Tables.parallelized(Tables.documents(s, dir))
+        Tables.documents(s, dir)
           .select(explode(split(lower($"text"), "[^a-z]+")).as("tok"))
           .filter(length($"tok") >= 3)
           .select(expr("word_stem(tok, 'en')").as("stem"))
@@ -1026,8 +1026,7 @@ object TextPipeline extends QueryGroup {
     "dedup_char_shingles" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val t = Tables.parallelized(
-            Tables.documents(s, dir).filter($"doc_id" < 120))
+        val t = Tables.documents(s, dir).filter($"doc_id" < 120)
           .withColumn("nt", normText($"text"))
           .filter(length($"nt") >= 5)
           .select($"doc_id",
@@ -1111,8 +1110,7 @@ object TextPipeline extends QueryGroup {
     "dedup_ngram_jaccard" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val t = Tables.parallelized(
-            Tables.documents(s, dir).filter($"doc_id" < 500))
+        val t = Tables.documents(s, dir).filter($"doc_id" < 500)
           .select($"doc_id", hashedWordSet($"text").as("w"))
         val a = t.select($"doc_id".as("id_a"), $"w".as("wa"))
         val b = t.select($"doc_id".as("id_b"), $"w".as("wb"))
@@ -1259,8 +1257,7 @@ object TextPipeline extends QueryGroup {
         import s.implicits._
         val assign = verifiedClusterAssignment(
           Tables.documents(s, dir).select($"doc_id", $"text"))
-        val t = Tables.parallelized(
-            Tables.documents(s, dir).filter($"doc_id" < 500))
+        val t = Tables.documents(s, dir).filter($"doc_id" < 500)
           .select($"doc_id", wordSet($"text").as("w"))
         val a = t.select($"doc_id".as("id_a"), $"w".as("wa"))
         val b = t.select($"doc_id".as("id_b"), $"w".as("wb"))
@@ -1363,8 +1360,9 @@ object TextPipeline extends QueryGroup {
         // signature pass runs once and both consumers serve from
         // parquet. The fixpoint keeps the inline row's valve
         // (maxIters = 15, requireConverged), which governs only the
-        // distributed finish: below the contracted-graph bound the
-        // finish is exact, on the driver, and the valve does not apply.
+        // distributed finish: when the edge list or the contracted graph
+        // fits the driver bound the finish is exact, on the driver, and
+        // the valve does not apply.
         neardupBucketEdges(s, dir)
           .write.mode("overwrite").parquet(s"$pfx/buckets")
         Clustering.propagateToFixpoint(s.read.parquet(s"$pfx/buckets"),
@@ -1409,8 +1407,8 @@ object TextPipeline extends QueryGroup {
           .filter($"id" % 2 === 0)
           .select($"bucket").distinct()
           .withColumn("hit", lit(1L))
-        val probe = Tables.parallelized(Tables.documents(s, dir)
-            .filter($"doc_id" % 2 === 1))
+        val probe = Tables.documents(s, dir)
+            .filter($"doc_id" % 2 === 1)
           .select($"doc_id", PortableLsh.wordBaseHashes($"text").as("x"))
           .select($"doc_id", PortableLsh.minhashArray($"x").as("m"))
           .select($"doc_id",
@@ -1441,8 +1439,7 @@ object TextPipeline extends QueryGroup {
     "dedup_simhash" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val docs = Tables.parallelized(
-            Tables.documents(s, dir).filter($"doc_id" < 500))
+        val docs = Tables.documents(s, dir).filter($"doc_id" < 500)
           .select($"doc_id", hashedWordSet($"text").as("w"))
           .withColumn("hashes", $"w")
           .withColumn("simhash",
@@ -1505,7 +1502,7 @@ object TextPipeline extends QueryGroup {
           "fr" -> Seq("le", "la", "de", "vite", "requete"),
           "de" -> Seq("der", "und", "von", "schnell", "abfrage"),
           "zh" -> Seq("chaxun", "kuai", "shuju", "biao", "hang"))
-        val deduped = Tables.parallelized(Tables.documents(s, dir))
+        val deduped = Tables.documents(s, dir)
           .select($"doc_id", normText($"text").as("nt"))
           .groupBy($"nt").agg(min($"doc_id").as("doc_id"))
         val scores = seeds.toSeq.sortBy(_._1).map { case (lang, ws) =>
@@ -1619,7 +1616,7 @@ object TextPipeline extends QueryGroup {
     "pipeline_decontamination" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val grams = Tables.parallelized(Tables.documents(s, dir))
+        val grams = Tables.documents(s, dir)
           .withColumn("toks", split(normText($"text"), " "))
           .filter(size($"toks") >= 5)
           .withColumn("ngram", explode(array_distinct(expr(
@@ -1672,7 +1669,7 @@ object TextPipeline extends QueryGroup {
         // one window shuffle on gram, one groupBy shuffle on doc, and
         // the explode subtree executes exactly once (no self-joins
         // that would recompute it)
-        val pairs = Tables.parallelized(Tables.documents(s, dir))
+        val pairs = Tables.documents(s, dir)
           .withColumn("toks", split(normText($"text"), " "))
           .filter(size($"toks") >= 5)
           .withColumn("gram", explode(array_distinct(expr(
@@ -1852,7 +1849,7 @@ object TextPipeline extends QueryGroup {
         // localCheckpoint preserves the repartition(32) layout, so
         // per-partition row order — and every downstream double sum —
         // is bit-identical (the BPE/dsir checkpoint precedent).
-        val toksDf = Tables.parallelized(Tables.documents(s, dir))
+        val toksDf = Tables.documents(s, dir)
           .select($"doc_id", split(normText($"text"), " ").as("toks"))
           .localCheckpoint()
         val docBi = toksDf
@@ -1921,7 +1918,7 @@ object TextPipeline extends QueryGroup {
         // their two broadcast consumers (optimization r20, guide
         // §2.4; aliased broadcast copies defeat exchange reuse — the
         // rename projection sits above the aggregate)
-        val toksDf = Tables.parallelized(Tables.documents(s, dir))
+        val toksDf = Tables.documents(s, dir)
           .select($"doc_id", split(normText($"text"), " ").as("toks"))
           .localCheckpoint()
         def triOf(df: DataFrame): DataFrame = df
@@ -2075,7 +2072,7 @@ object TextPipeline extends QueryGroup {
         val (_, finalVocab) = learnBpe(s, dir)
         val wc = finalVocab.select($"w",
           size(expr("split(trim(seq), '  ')")).cast("long").as("n_sym"))
-        Tables.parallelized(Tables.documents(s, dir))
+        Tables.documents(s, dir)
           .select($"doc_id", explode(split(normText($"text"), " ")).as("w"))
           .join(broadcast(wc), "w")
           .groupBy($"doc_id")
@@ -2122,7 +2119,7 @@ object TextPipeline extends QueryGroup {
         val (_, finalVocab) = learnBpe(s, dir)
         val syms = finalVocab.select($"w",
           expr("split(trim(seq), '  ')").as("syms"))
-        Tables.parallelized(Tables.documents(s, dir))
+        Tables.documents(s, dir)
           .select($"doc_id",
             posexplode(split(normText($"text"), " ")).as(Seq("i", "w")))
           .join(broadcast(syms), "w")
@@ -2214,7 +2211,7 @@ object TextPipeline extends QueryGroup {
         import s.implicits._
         val (_, best) = learnUnigram(s, dir)
         val segs = best.select($"w", split($"seg", " ").as("pieces"))
-        Tables.parallelized(Tables.documents(s, dir))
+        Tables.documents(s, dir)
           .select($"doc_id",
             posexplode(split(normText($"text"), " ")).as(Seq("i", "w")))
           .join(broadcast(segs), "w")
@@ -2383,7 +2380,7 @@ object TextPipeline extends QueryGroup {
       (s, dir) => {
         import s.implicits._
         val k = 0.5
-        val toksDf = Tables.parallelized(Tables.documents(s, dir))
+        val toksDf = Tables.documents(s, dir)
           .select($"doc_id", split(normText($"text"), " ").as("toks"))
         val uni = toksDf.select(explode($"toks").as("w1"))
           .groupBy($"w1").agg(count(lit(1)).as("c1"))
@@ -2485,7 +2482,7 @@ object TextPipeline extends QueryGroup {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         val L = 4
-        val toksDf = Tables.parallelized(Tables.documents(s, dir))
+        val toksDf = Tables.documents(s, dir)
           .select($"doc_id", split(normText($"text"), " ").as("toks"))
         val segs = toksDf
           .select($"doc_id", explode(expr(
@@ -2729,7 +2726,7 @@ object TextPipeline extends QueryGroup {
       (s, dir) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        val grams = Tables.parallelized(Tables.documents(s, dir))
+        val grams = Tables.documents(s, dir)
           .select($"doc_id", split(normText($"text"), " ").as("toks"))
           .filter(size($"toks") >= 10)
           .select($"doc_id", size($"toks").as("n_toks"),
@@ -2912,7 +2909,7 @@ object TextPipeline extends QueryGroup {
     "pipeline_dsir_sample" -> QueryDef(
       (s, dir) => {
         import s.implicits._
-        val perDocBucket = Tables.parallelized(Tables.documents(s, dir))
+        val perDocBucket = Tables.documents(s, dir)
           .select($"doc_id", $"lang",
             explode(split(normText($"text"), " ")).as("rawtok"))
           .withColumn("tok", regexp_replace($"rawtok", "[^a-z0-9]", ""))
@@ -2978,8 +2975,7 @@ object TextPipeline extends QueryGroup {
   private def minhashLsh(s: SparkSession, dir: String, bound: Option[Int]): DataFrame = {
     import s.implicits._
     val base = Tables.documents(s, dir)
-    val docs = Tables.parallelized(
-        bound.fold(base)(b => base.filter($"doc_id" < b)))
+    val docs = bound.fold(base)(b => base.filter($"doc_id" < b))
       .select($"doc_id", hashedWordSet($"text").as("w"))
     lshPairs(docs)
   }

@@ -69,17 +69,24 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("edge and contracted-edge row counts ride the materializations") {
-    // the edge count is observed on the edge cache; the contracted
-    // count is the rows the driver finish collects (observed on the
-    // contracted edge cache on the distributed finish, which the
-    // both-finishes case below compares); the values must not move.
-    // sf0.1 gives 16024 / 2033 and 19246 / 5016 for the same two rows.
+    // both counts are observed on the by-id checkpoints of the edge
+    // list and of the contracted graph. Under a bound between the two
+    // the contracted driver finish records both; by default the whole
+    // edge list fits the driver, which contracts nothing. The values
+    // must not move. sf0.1 gives 16024 / 2033 and 19246 / 5016 for the
+    // same two rows.
     Seq("sim_embed_neardup_full" -> (4024L, 1681L),
-      "dedup_minhash_lsh_full" -> (2040L, 504L)).foreach { case (q, rows) =>
-      SparkEntry.queries(q)(spark, sfDir) // the builder runs the fixpoint
-      withClue(s"$q: ") {
-        val stats = Clustering.lastStats
-        (stats.edgeRows, stats.contractedEdgeRows) shouldBe rows
+      "dedup_minhash_lsh_full" -> (2040L, 504L)).foreach {
+      case (q, (edgeRows, contractedRows)) => withClue(s"$q: ") {
+        // the builder runs the fixpoint
+        withDriverBound(contractedRows)(SparkEntry.queries(q)(spark, sfDir))
+        val c = Clustering.lastStats
+        (c.edgeRows, c.contractedEdgeRows, c.path) shouldBe
+          ((edgeRows, contractedRows, Clustering.ContractedPath))
+        SparkEntry.queries(q)(spark, sfDir)
+        val w = Clustering.lastStats
+        (w.edgeRows, w.contractedEdgeRows, w.rounds, w.path) shouldBe
+          ((edgeRows, edgeRows, 0, Clustering.WholeGraphPath))
       }
     }
   }
@@ -117,62 +124,81 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture with Matchers {
     (storedRdds -- beforeThrow) shouldBe empty
   }
 
-  /** The labels and stats of one call on the default finish and one
-    * with the threshold at -1, after checking that they agree. */
-  private def bothFinishes(edges: org.apache.spark.sql.DataFrame,
+  /** The stats of one call on each finish — the default (the whole
+    * edge list fits the driver), a bound of the contracted graph's rows
+    * (the contracted driver finish) and the threshold at -1
+    * (distributed) — after checking that they agree. */
+  private def threeFinishes(edges: org.apache.spark.sql.DataFrame,
       maxIters: Int): Seq[Clustering.FixpointStats] = {
     import spark.implicits._
     def run() = {
       val (labels, stats) = Clustering.fixpointWithStats(edges, maxIters)
       (labels.schema, labels.orderBy($"id").as[(Long, Long)].collect().toSeq, stats)
     }
-    val (dSchema, dLabels, d) = run()
     val (sSchema, sLabels, s) = withDistributedFixpoint(run())
-    dLabels shouldBe sLabels
-    dSchema shouldBe sSchema
-    (d.edgeRows, d.contractedEdgeRows) shouldBe ((s.edgeRows, s.contractedEdgeRows))
-    (d.path, s.path) shouldBe ((Clustering.DriverPath, Clustering.DistributedPath))
-    Seq(d, s).map(_.converged) shouldBe Seq(true, true)
-    Seq(d, s)
+    // any bound in [contracted rows, edge rows) takes the contracted
+    // finish; the lowest one also pins that the bound is inclusive
+    s.contractedEdgeRows should be < s.edgeRows
+    val (cSchema, cLabels, c) = withDriverBound(s.contractedEdgeRows)(run())
+    val (wSchema, wLabels, w) = run()
+    Seq(wLabels, cLabels) shouldBe Seq(sLabels, sLabels)
+    Seq(wSchema, cSchema) shouldBe Seq(sSchema, sSchema)
+    val stats = Seq(w, c, s)
+    stats.map(_.path) shouldBe
+      Seq(Clustering.WholeGraphPath, Clustering.ContractedPath, Clustering.DistributedPath)
+    stats.map(_.edgeRows) shouldBe Seq.fill(3)(s.edgeRows)
+    stats.map(_.converged) shouldBe Seq(true, true, true)
+    c.contractedEdgeRows shouldBe s.contractedEdgeRows
+    (w.rounds, w.contractedEdgeRows) shouldBe ((0, w.edgeRows))
+    stats
   }
 
-  test("the driver and the distributed finish agree on every fixture") {
+  test("the three finishes agree on every fixture") {
     import spark.implicits._
     val fixtures = Seq(
       Seq((1L, "b1"), (5L, "b1"), (5L, "b2"), (9L, "b2")),
       Seq((1L, "a"), (2L, "a"), (7L, "z"), (8L, "z"), (3L, "solo")),
       Seq((1L, "b1"), (5L, "b1")),
       (1 to 5).flatMap(i => Seq((i.toLong, s"e$i"), ((i + 1).toLong, s"e$i"))),
-      Seq((10L, "x"), (11L, "x"), (11L, "y"), (12L, "y"), (20L, "z"))
+      Seq((10L, "x"), (11L, "x"), (11L, "y"), (12L, "y"), (20L, "z")),
+      // the rounds' inner joins drop null buckets: 3 has no other
+      // bucket and gets no label, and 2 keeps only bucket a
+      Seq((1L, "a"), (2L, "a"), (2L, null), (3L, null), (4L, "b"))
     ).map(_.toDF("id", "bucket")) ++ Seq(5L, 7L, 11L).map(pathEdges)
     // a 41-node path leaves a 38-node contracted path: 37 rounds to
     // settle, then one double round to see the sum stand still
     for ((edges, i) <- fixtures.zipWithIndex) withClue(s"fixture $i: ") {
-      bothFinishes(edges, maxIters = 25)
+      threeFinishes(edges, maxIters = 25)
     }
-    val Seq(driver, distributed) = bothFinishes(pathEdges(40), maxIters = 25)
-    (driver.rounds, distributed.rounds) shouldBe ((3, 6 + 2 * 18))
+    threeFinishes(pathEdges(40), maxIters = 25).map(_.rounds) shouldBe
+      Seq(0, 3, 6 + 2 * 18)
   }
 
-  test("the driver and the distributed finish agree on the sf0.001 fixpoint rows") {
+  test("the three finishes agree on the sf0.001 fixpoint rows") {
     // the five rows that run the fixpoint in their builder, and
     // pipeline_incremental_dedup, which reads the bucket table the
-    // materialized split writes (its output only)
+    // materialized split writes (its output only; the bound it runs
+    // under is the last fixpoint's and changes nothing for it)
     val fixpointRows = Seq("dedup_minhash_lsh_full", "dedup_lsh_recall_verified",
       "sim_embed_neardup_full", "pipeline_leakage_split",
       "pipeline_leakage_split_materialized")
     for (q <- fixpointRows :+ "pipeline_incremental_dedup") withClue(s"$q: ") {
       def run() = {
-        val rows = SparkEntry.queries(q)(spark, sfDir).collect().toSeq
-        (rows.sortBy(_.toString), Clustering.lastStats)
+        val df = SparkEntry.queries(q)(spark, sfDir)
+        (df.schema, df.collect().toSeq.sortBy(_.toString), Clustering.lastStats)
       }
-      val (dRows, d) = run()
-      val (sRows, s) = withDistributedFixpoint(run())
-      dRows should not be empty
-      dRows shouldBe sRows
+      val (sSchema, sRows, s) = withDistributedFixpoint(run())
+      val (cSchema, cRows, c) = withDriverBound(s.contractedEdgeRows)(run())
+      val (wSchema, wRows, w) = run()
+      sRows should not be empty
+      Seq(wRows, cRows) shouldBe Seq(sRows, sRows)
+      Seq(wSchema, cSchema) shouldBe Seq(sSchema, sSchema)
       if (fixpointRows.contains(q)) {
-        (d.edgeRows, d.contractedEdgeRows) shouldBe ((s.edgeRows, s.contractedEdgeRows))
-        (d.path, s.path) shouldBe ((Clustering.DriverPath, Clustering.DistributedPath))
+        Seq(w, c, s).map(_.path) shouldBe Seq(Clustering.WholeGraphPath,
+          Clustering.ContractedPath, Clustering.DistributedPath)
+        Seq(w.edgeRows, c.edgeRows) shouldBe Seq(s.edgeRows, s.edgeRows)
+        c.contractedEdgeRows shouldBe s.contractedEdgeRows
+        (w.rounds, w.contractedEdgeRows) shouldBe ((0, w.edgeRows))
       }
     }
   }

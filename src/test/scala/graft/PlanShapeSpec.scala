@@ -21,11 +21,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers {
     plan should include("GreaterThan(l_quantity")
   }
 
-  test("predicates reach the parquet scan through Tables.parallelized") {
-    val df = Tables.parallelized(Tables.lineitem(spark, sfDir))
+  test("predicates reach the parquet scan of a Tables frame") {
+    val df = Tables.lineitem(spark, sfDir)
       .where("l_shipdate >= DATE '1994-01-01' AND l_quantity < 24")
-    // a repartition that parallelized inserts must not stop the filter;
-    // the formatted plan prints the pushed filters unabbreviated
+    // the temp view behind the frame must not stop the filter; the
+    // formatted plan prints the pushed filters unabbreviated
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     val pushed = plan.split("\n").filter(_.contains("PushedFilters")).toSeq

@@ -64,7 +64,7 @@ class Round17FixesSpec extends AnyFunSuite with SparkFixture with Matchers {
         Seq((i, s"b$i"), (i + 1, s"b$i")))
       .toDF("id", "bucket")
     // the valve guards the distributed finish, which the threshold at
-    // -1 forces; below the bound the driver finish is exact (last check)
+    // -1 forces; below the bound a driver finish is exact (last check)
     withDistributedFixpoint {
       val ex = intercept[RuntimeException] {
         graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 3,
@@ -80,7 +80,7 @@ class Round17FixesSpec extends AnyFunSuite with SparkFixture with Matchers {
           requireConverged = true)
         .select(countDistinct($"cluster")).head().getLong(0) shouldBe 1L
     }
-    // the default (driver) finish returns the exact components of the
+    // the default (whole-graph) finish returns the exact components of the
     // same path at the same maxIters = 3, and the flag passes
     graft.queries.Clustering.propagateToFixpoint(edges, maxIters = 3,
         requireConverged = true)
