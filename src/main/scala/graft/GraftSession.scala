@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Single place for engine session config (SURVEY.md §7.0).
   *
@@ -8,6 +8,10 @@ import org.apache.spark.sql.SparkSession
   * real cluster this would be set ~2-3× total executor cores (or left
   * to AQE coalescing, which is enabled by default in Spark 4 and
   * collapses the post-shuffle partition count to fit the data).
+  * Coalescing still pays for the shuffle it shrinks, and a global sort
+  * also pays its range partitioner's sampling job: a sort whose input
+  * is at most what AQE coalesces into one partition skips both and
+  * sorts in one partition (see OnePartitionSort).
   */
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -16,9 +20,7 @@ object GraftSession {
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
-      // WKT point codec cancellation (see PointCodecSimplification):
-      // spatial-join refine steps become plain double arithmetic.
-      .withExtensions(_.injectOptimizerRule(_ => graft.plans.PointCodecSimplification))
+      .withExtensions(injectPlanRules)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       // events.ts is TIMESTAMP(NANOS) parquet, unsupported by Spark's
@@ -53,6 +55,18 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     registerFunctions(spark)
     spark
+  }
+
+  /** The engine's plan rules, injected into a session's extensions. */
+  def injectPlanRules(e: SparkSessionExtensions): Unit = {
+    // WKT point codec cancellation (see PointCodecSimplification):
+    // spatial-join refine steps become plain double arithmetic.
+    e.injectOptimizerRule(_ => graft.plans.PointCodecSimplification)
+    // a small global sort runs in one partition, with no range
+    // exchange: static estimates bound scans and projections, AQE's
+    // runtime statistics bound sorts above materialized stages
+    e.injectOptimizerRule(_ => graft.plans.OnePartitionSort)
+    e.injectRuntimeOptimizerRule(_ => graft.plans.OnePartitionSort)
   }
 
   /** The engine's function surface, registered into `spark`'s session

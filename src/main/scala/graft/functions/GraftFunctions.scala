@@ -547,6 +547,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftFunctions.allWithAliases.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.PointCodecSimplification)
+    graft.GraftSession.injectPlanRules(ext)
   }
 }

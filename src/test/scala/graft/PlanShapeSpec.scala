@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{array, posexplode}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -8,7 +13,8 @@ import org.scalatest.matchers.should.Matchers
   * per group uses the bounded WindowGroupLimit, metadata passes prune
   * unused columns, and hot paths stay inside WholeStageCodegen.
   */
-class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers {
+class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers
+    with AdaptiveSparkPlanHelper {
 
   private def planOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sfDir)
@@ -51,7 +57,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("limit_topn compiles to TakeOrderedAndProject (no full sort)") {
-    planOf("limit_topn") should include("TakeOrderedAndProject")
+    val plan = planOf("limit_topn")
+    plan should include("TakeOrderedAndProject")
+    // a sort under a limit is left to TakeOrderedAndProject by OnePartitionSort
+    plan should not include "Coalesce"
   }
 
   test("metadata-only multimodal pass prunes the payload column") {
@@ -69,7 +78,78 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("global sort uses range partitioning (distributed sort shape)") {
-    planOf("sort_multi") should include("rangepartitioning")
+    // sort_multi's sf0.001 input is below OnePartitionSort's bound; the
+    // distributed shape is the contract above it
+    withDistributedSort {
+      planOf("sort_multi") should include("rangepartitioning")
+    }
+  }
+
+  /** The range exchanges of `plan`'s current physical plan, an AQE
+    * plan's query stages included. */
+  private def rangeExchanges(plan: SparkPlan): Int =
+    collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .count(_.isInstanceOf[RangePartitioning])
+
+  /** Every global sort of `plan` sorts under `Coalesce 1`, and no
+    * exchange range-partitions. */
+  private def sortsInOnePartition(plan: SparkPlan): Unit = {
+    val sortChildren = collect(plan) { case s: SortExec if s.global => s.child match {
+      case InputAdapter(c) => c // the codegen boundary of an executed plan
+      case c => c
+    } }
+    sortChildren should not be empty
+    all(sortChildren) should matchPattern { case CoalesceExec(1, _) => }
+    rangeExchanges(plan) shouldBe 0
+  }
+
+  test("a global sort below the one-partition bound sorts under Coalesce 1, no range exchange") {
+    for (name <- Seq("sort_multi", "fn_string")) withClue(name) {
+      sortsInOnePartition(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+    }
+  }
+
+  test("tpch_q1's AQE final plan has no range exchange") {
+    val df = SparkEntry.queries("tpch_q1")(spark, sfDir)
+    df.collect()
+    df.queryExecution.executedPlan.toString should include("isFinalPlan=true")
+    sortsInOnePartition(df.queryExecution.executedPlan)
+  }
+
+  test("runtime statistics drop the range exchange that static estimates keep") {
+    // scaled file sizes put the static estimate of q1's aggregate above
+    // the bound; the runtime statistics of its shuffle stage are below
+    withConf("spark.sql.sources.fileCompressionFactor", "1000") {
+      val df = SparkEntry.queries("tpch_q1")(spark, sfDir)
+      df.queryExecution.executedPlan.toString should include("rangepartitioning")
+      df.collect()
+      df.queryExecution.executedPlan.toString should include("isFinalPlan=true")
+      sortsInOnePartition(df.queryExecution.executedPlan)
+    }
+  }
+
+  test("a sort whose range exchange has already run keeps it") {
+    // the static estimate keeps the range exchange, and its stage runs
+    // first: its small runtime size must not re-plan the sort above it
+    withConf("spark.sql.sources.fileCompressionFactor", "1000") {
+      val df = SparkEntry.queries("sort_multi")(spark, sfDir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      plan.toString should include("isFinalPlan=true")
+      rangeExchanges(plan) shouldBe 1
+      collect(plan) { case c: CoalesceExec => c } shouldBe empty
+    }
+  }
+
+  test("a sort over rows Spark's size estimate does not bound keeps its range exchange") {
+    val s = spark
+    import s.implicits._
+    val exploded = Tables.orders(spark, sfDir)
+      .select($"o_orderkey", posexplode(array($"o_totalprice", $"o_custkey")))
+      .orderBy($"o_orderkey", $"pos")
+    exploded.queryExecution.executedPlan.toString should include("rangepartitioning")
+    val flatMapped = spark.range(10).as[Long].flatMap(i => Seq.fill(3)(i)).orderBy($"value")
+    flatMapped.queryExecution.executedPlan.toString should include("rangepartitioning")
   }
 
   test("full-corpus LSH dedup has no quadratic operator") {
@@ -334,7 +414,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with Matchers {
     val df = SparkEntry.queries("pipeline_corpus_curation")(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     // hash exchanges: normalized-text dedup and the language rollup;
-    // the trailing orderBy adds one range exchange. Anything more
+    // the trailing orderBy adds one range exchange above
+    // OnePartitionSort's bound and none below it. Anything more
     // means a stage recomputes or re-partitions needlessly.
     plan.sliding("hashpartitioning".length)
       .count(_ == "hashpartitioning") should be <= 4

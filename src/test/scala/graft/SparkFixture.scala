@@ -11,15 +11,17 @@ trait SparkFixture extends BeforeAndAfterAll { this: Suite =>
   lazy val spark: SparkSession = GraftSession.build("graft-test")
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` at
-    * `value` and restores the setting afterwards. */
-  private def withThreshold[T](value: String)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
+  /** Runs `body` with the session conf `key` at `value` and restores
+    * the setting afterwards. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, value)
     try body
     finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  private def withThreshold[T](value: String)(body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", value)(body)
 
   /** Runs `body` with the threshold at -1, which sends every clustering
     * fixpoint down its distributed finish. */
@@ -34,4 +36,10 @@ trait SparkFixture extends BeforeAndAfterAll { this: Suite =>
       AttributeReference("id", LongType)(), AttributeReference("bucket", StringType)()))
     withThreshold((perRow * rows).toString)(body)
   }
+
+  /** Runs `body` with AQE's one-partition coalescing size at one byte,
+    * so that every global sort is above the bound of
+    * [[graft.plans.OnePartitionSort]] and plans its range exchange. */
+  def withDistributedSort[T](body: => T): T =
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")(body)
 }
