@@ -3,16 +3,12 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   /** Bench hygiene, shared by the three measuring mains (Bench,
-    * tools.Profile, ScaleProbe): clearCache() drops CacheManager entries, and
-    * localCheckpoint blocks (registered as persistent RDDs, reclaimed
-    * otherwise only after a driver GC) are unpersisted explicitly, so
-    * storage pressure never bleeds into the next measurement (r14
-    * review).
-    * CONTRACT (ADVICE r14 #5): this unpersists EVERY persistent RDD in
-    * the context, so no gate query may deliberately cache state for
-    * reuse across interleaved bench passes — each invocation must be
-    * self-contained. A future cross-pass cache would be silently
-    * evicted here and must instead persist to the warehouse (the
+    * tools.Profile, ScaleProbe): drops every CacheManager entry and
+    * frees every persistent RDD, among them the checkpoints a returned
+    * frame reads ([[graft.queries.Checkpoints]] states the storage
+    * rule), so storage pressure never bleeds into the next measurement.
+    * No query may therefore cache state for reuse across bench passes;
+    * a cross-pass asset persists to the warehouse instead (the
     * materializeStar/materializeStemDict pattern). */
   def dropStorage(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

@@ -1,9 +1,7 @@
 package graft.queries
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -52,14 +50,13 @@ import scala.jdk.CollectionConverters._
   *
   * Reference semantics: presto-ads has no clustering operator — this is
   * the dedup completion the 100 TB pipeline needs (VERDICT r2 §3).
-  * Every materialization is an eager localCheckpoint: a flat
-  * LogicalRDD leaf, so a later round's plan never embeds the rounds
-  * before it. (A persist() wraps the round in an InMemoryRelation
-  * whose plan embeds the whole child tree; at sf0.1 that cost 1.5-4.6 s
-  * of driver re-planning per action by round 5, against 0.04-0.16 s
-  * for the flat leaves — OPTIMIZATION_r20.md, BENCH_NOTES.md.) The
-  * checkpoint blocks live on executors, so a lost executor fails the
-  * query instead of recomputing the round.
+  * Every materialization is a localCheckpoint: a flat LogicalRDD
+  * leaf, so a later round's plan never embeds the rounds before it.
+  * (A persist() wraps the round in an InMemoryRelation whose plan
+  * embeds the whole child tree; at sf0.1 that cost 1.5-4.6 s of driver
+  * re-planning per action by round 5, against 0.04-0.16 s for the flat
+  * leaves — OPTIMIZATION_r20.md, BENCH_NOTES.md.) Storage follows
+  * [[Checkpoints]].
   */
 object Clustering {
 
@@ -197,15 +194,12 @@ object Clustering {
     import spark.implicits._
     // Spark actions the call runs, for the [clustering] line
     var actions = 0
-    // the RDD behind each intermediate checkpoint: the LogicalRDD leaf
-    // holds the stored RDD itself (`df.rdd` would be a fresh mapped
-    // RDD whose unpersist frees nothing)
-    val intermediates = scala.collection.mutable.ListBuffer.empty[RDD[_]]
+    // every intermediate checkpoint, released when the call ends
+    val intermediates = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def intermediate(df: DataFrame): DataFrame = {
-      val m = df.localCheckpoint(eager = true)
       actions += 1
-      intermediates ++= m.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-      m
+      intermediates += df.localCheckpoint()
+      intermediates.last
     }
     // materialize `df` with one aggregate `metric` observed on the
     // materializing action itself: the eager checkpoint runs the plan
@@ -329,7 +323,7 @@ object Clustering {
         sys.error(s"label propagation still moving after maxIters=$maxIters " +
           "rounds — refusing to return a non-converged clustering " +
           "(requireConverged=true)")
-      val out = result.localCheckpoint(eager = true)
+      val out = result.localCheckpoint()
       actions += 1
       System.err.println(
         s"[clustering] fixpoint after ${stats.rounds} rounds " +
@@ -337,6 +331,6 @@ object Clustering {
           s"converged=${stats.converged}, edges=$edgeRows " +
           s"contracted=${stats.contractedEdgeRows})")
       (out, stats)
-    } finally intermediates.foreach(_.unpersist(blocking = false))
+    } finally intermediates.foreach(Checkpoints.release(_))
   }
 }

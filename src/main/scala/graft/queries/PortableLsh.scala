@@ -33,7 +33,6 @@ import org.apache.spark.sql.functions._
 object PortableLsh {
   val P: Long = graft.functions.CwMinhash.P // 2^31 - 1, prime
   val NumPerms = graft.functions.CwMinhash.NumPerms
-  val NumBands = 16
   val RowsPerBand = 4
 
   /** Candidate-edge verification threshold (of [[NumPerms]]=64
@@ -66,15 +65,13 @@ object PortableLsh {
     transform(words, t => conv(substring(md5(t), 1, 8), 16, 10).cast("long") % P)
   }
 
-  /** Spark side: the 16 band-bucket strings for an x-array column, all
+  /** Spark side: the band-bucket strings for an x-array column at an
+    * explicit rows-per-band (band count = NumPerms / rowsPerBand), all
     * minhashes computed in ONE projection (mirrors the r2/r3 lesson:
-    * explode only the 16 bucket strings, never the wide array). */
-  def bucketArray(x: Column): Column = bucketArrayBanded(x, RowsPerBand)
-
-  /** [[bucketArray]] at an explicit rows-per-band (band count =
-    * NumPerms / rowsPerBand). More rows per band = stricter candidate
-    * threshold (collision prob ≈ j^rows per band): dedup recall wants
-    * the default 4; split hygiene (pipeline_leakage_split) wants 16 —
+    * explode only the bucket strings, never the wide array). More rows
+    * per band = stricter candidate threshold (collision prob ≈ j^rows
+    * per band): dedup recall wants [[RowsPerBand]]; split hygiene
+    * (pipeline_leakage_split) wants 16 —
     * at 4 this corpus's LSH graph is one connected component, which
     * would put every document in one split. Both trade-offs are
     * MEASURED against the exact Jaccard pair set since r18
@@ -159,8 +156,6 @@ object PortableLsh {
        |  FROM xr, consts c GROUP BY doc_id, c.i),
        |mh AS MATERIALIZED (SELECT doc_id, list(mi ORDER BY i) AS m FROM mhrow GROUP BY doc_id)""".stripMargin
   }
-
-  def duckMinhashEdges: String = duckMinhashEdgesBanded(RowsPerBand)
 
   /** The (id, bucket) edge CTE chain at an explicit rows-per-band,
     * mirroring [[bucketArrayBanded]] (identical "b:m1-m2-…" bucket

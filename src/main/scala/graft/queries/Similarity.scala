@@ -65,11 +65,6 @@ object Similarity extends QueryGroup {
     df.unionByName(planted)
   }
 
-  private def duckPlanted(n: Int): String =
-    s"""SELECT vec_id + 100000 AS vec_id, label,
-       |  list_transform(v, x -> x + 0.001) AS v
-       |FROM c WHERE vec_id < $n""".stripMargin
-
   // --- banded hyperplane signatures ------------------------------------
 
   /** Array of NBands sign-bit band signatures for vector column `v` —
@@ -230,15 +225,8 @@ object Similarity extends QueryGroup {
     // r19 persist — the 20-row table is a flat leaf, so no consumer
     // action re-plans the embedded two-pass Lloyd chain (the
     // nested-InMemoryRelation replanning cost measured in
-    // OPTIMIZATION_r20.md), and the release-on-next-call swap protocol
-    // (ADVICE r19 #4's race) disappears with the cache entry itself:
-    // 20-row checkpoint blocks are per-invocation scaffolding the
-    // harnesses' dropStorage reclaims. `eager = false` does NOT defer
-    // the Lloyd chain: under AQE the checkpoint plans the frame through
-    // an adaptive plan, which runs every shuffle stage (both Lloyd
-    // aggregates) here, at build time; only the final stage waits for
-    // the first action.
-    val c1 = roundedCentroids(a0).localCheckpoint(eager = false)
+    // OPTIMIZATION_r20.md). Its storage follows [[Checkpoints]].
+    val c1 = roundedCentroids(a0).localCheckpoint()
     val a1 = assignCells(corpus, c1)
     (a1, c1)
   }
@@ -337,9 +325,9 @@ object Similarity extends QueryGroup {
     // and the scored join — and branch-specific filters defeated
     // exchange reuse across them. Now:
     //  - the corpus is tokenized ONCE: the tokenized frame is
-    //    localCheckpoint-ed (the BPE/dsir precedent; per-invocation
-    //    blocks, released by the harnesses' dropStorage) and feeds
-    //    query terms, corpus stats, and the postings build;
+    //    localCheckpoint-ed (the BPE/dsir precedent; storage as in
+    //    [[Checkpoints]]) and feeds query terms, corpus stats, and the
+    //    postings build;
     //  - only QUERY-TERM postings are ever aggregated: the exploded
     //    tokens semi-join the broadcast query-term list BEFORE the
     //    groupBy (guide §2.3 "shuffle fewer bytes" / §3.2 pre-filter
@@ -655,13 +643,11 @@ object Similarity extends QueryGroup {
     // and (in the materialized row) its own write — one localCheckpoint
     // so the seed-assignment chain executes once and every consumer
     // plans against a flat 32-row leaf (r20, the c1 treatment; replaces
-    // the r19 persist + release-on-next-call swap). As for c1,
-    // `eager = false` still runs the codebook aggregate's shuffle stage
-    // at build time under AQE; only the final stage is deferred.
+    // the r19 persist). Its storage follows [[Checkpoints]].
     val codebook = assign1.groupBy($"m", $"cid")
       .agg(array((0 until Sub).map(i =>
         avg(element_at($"sv", i + 1))): _*).as("cw"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val cbArr = codebook
       .groupBy($"m").agg(collect_list(struct($"cid", $"cw")).as("cands"))
     val codes = sub.join(broadcast(cbArr), Seq("m"))
@@ -1085,6 +1071,8 @@ object Similarity extends QueryGroup {
         c1.write.mode("overwrite").parquet(s"$pfx/centroids")
         codes.write.mode("overwrite").parquet(s"$pfx/codes")
         codebook.write.mode("overwrite").parquet(s"$pfx/codebook")
+        // serve reads the written tables only
+        Seq(c1, codebook).foreach(Checkpoints.release(_))
         val cells = s.read.parquet(s"$pfx/cells")
           .select($"vec_id", $"cell".cast("string").as("cell"))
         val cen = s.read.parquet(s"$pfx/centroids")
@@ -1811,15 +1799,8 @@ object Similarity extends QueryGroup {
       import s.implicits._
       // exact3 (30 rows) is consumed twice (the hits semi-join and the
       // `possible` scalar) — checkpoint it once like the tiers below.
-      // `eager = false` here and below truncates the plan to a
-      // LogicalRDD leaf that both consumers share, but it defers less
-      // than its name says: under AQE the checkpoint plans the frame
-      // through an adaptive plan, which runs EVERY shuffle stage
-      // (each tier's full serve pipeline) here, at build time; only
-      // the final stage waits for the first action. An action that
-      // needs no tier values therefore does not skip the tier work.
       val exact3 = exactTopk(s, dir, 3).select($"q_id", $"vec_id")
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
       // Each tier's shortlist is ≤ |Q|·k rows but composes that tier's
       // FULL serve pipeline; the union of the raw builders was a
       // ~561-Exchange tree referenced TWICE below (hits + retrieved),
@@ -1831,24 +1812,22 @@ object Similarity extends QueryGroup {
       // aggregate over the hit-marked shortlists, so the union has
       // exactly one consumer and is computed exactly once, with the
       // independent tier legs still running as concurrent stages of
-      // that one action. (Two alternatives were measured and
-      // rejected: checkpointing each tier separately — 11 eager
-      // actions serialize the legs, 11.7 → 14.8 s; and an EAGER union
-      // checkpoint with the old twin aggregates — fastest under the
-      // noop sink, 6.4-7.0 s. That one was turned down to keep the
-      // bench's count() from running the tier pipelines, on the
-      // premise that a lazy checkpoint skips them; under AQE it does
-      // not: this checkpoint runs their shuffle stages at build time
-      // too.) Values unchanged: exact3's
+      // that one action. (Checkpointing each tier separately was
+      // measured and rejected: 11 eager actions serialize the legs,
+      // 11.7 → 14.8 s.) Values unchanged: exact3's
       // (q_id, vec_id) pairs are unique by construction (row_number
       // enumerates distinct corpus rows per query), so a left join
       // never duplicates a shortlist row and count(hit) equals the
       // old semi-join count.
-      val shortlists = recallTiers.map { case (tier, q) =>
+      val tiers = recallTiers.map { case (tier, q) =>
         coreDefs(q).build(s, dir)
           .filter($"q_id" < 10 && $"rk" <= 3)
           .select(lit(tier).as("tier"), $"q_id", $"vec_id")
-      }.reduce(_ unionByName _).localCheckpoint(eager = false)
+      }.reduce(_ unionByName _)
+      val shortlists = tiers.localCheckpoint()
+      // the union is materialized: the tiers' own checkpoints are read
+      // no more
+      Checkpoints.release(tiers, exact3)
       val perTier = shortlists
         .join(exact3.withColumn("hit", lit(1)), Seq("q_id", "vec_id"), "left")
         .groupBy($"tier")
@@ -1967,7 +1946,7 @@ object Similarity extends QueryGroup {
     // re-planned the embedded 8-round window chain per action (the
     // nested-InMemoryRelation cost measured in OPTIMIZATION_r20.md);
     // the checkpoint is a flat leaf. Its blocks belong to the returned
-    // frame and are reclaimed by the harnesses' dropStorage.
+    // frame ([[Checkpoints]]).
     out.localCheckpoint()
   }
 

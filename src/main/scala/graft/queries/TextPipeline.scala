@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{QueryDef, QueryGroup, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -94,17 +93,6 @@ object TextPipeline extends QueryGroup {
     }
   }
 
-  /** Frees the checkpoints `df` reads, except those any of `keep`
-    * reads: each LogicalRDD leaf holds its stored RDD itself (`df.rdd`
-    * would be a fresh mapped RDD whose unpersist frees nothing). `df`
-    * must not be read afterwards. */
-  private def release(df: DataFrame, keep: DataFrame*): Unit = {
-    def stored(f: DataFrame) =
-      f.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-    val kept = keep.flatMap(stored).map(_.id).toSet
-    stored(df).filterNot(r => kept(r.id)).foreach(_.unpersist(blocking = false))
-  }
-
   /** Merge rounds for pipeline_bpe_vocab — fixed so the DuckDB oracle
     * can unroll the identical rounds as a static CTE chain. */
   private val BpeRounds = 8
@@ -157,7 +145,7 @@ object TextPipeline extends QueryGroup {
     def cut(): Unit = {
       val superseded = vocab
       vocab = vocab.localCheckpoint()
-      release(superseded)
+      Checkpoints.release(superseded)
     }
     var sinceCkpt = 0
     for (r <- 1 to BpeRounds if !exhausted) {
@@ -469,7 +457,7 @@ object TextPipeline extends QueryGroup {
         .select($"freq", explode(split($"seg", " ")).as("piece"))
         .groupBy($"piece").agg(sum($"freq").as("cnt"))
         .localCheckpoint()
-      release(superseded)
+      Checkpoints.release(superseded)
     }
     audit(unigramRawUnits(cnts))
     // the final E-step (tokenize) stays LAZY: the vocab row never
@@ -1365,10 +1353,11 @@ object TextPipeline extends QueryGroup {
         // the valve does not apply.
         neardupBucketEdges(s, dir)
           .write.mode("overwrite").parquet(s"$pfx/buckets")
-        Clustering.propagateToFixpoint(s.read.parquet(s"$pfx/buckets"),
-            maxIters = 15, requireConverged = true)
-          .select($"id", $"cluster")
+        val assign = Clustering.propagateToFixpoint(s.read.parquet(s"$pfx/buckets"),
+          maxIters = 15, requireConverged = true)
+        assign.select($"id", $"cluster")
           .write.mode("overwrite").parquet(s"$pfx/assignment")
+        Checkpoints.release(assign)
         splitDraw(s.read.parquet(s"$pfx/assignment"))
       },
       Some(duckLeakageSplitSql)),
@@ -1932,22 +1921,18 @@ object TextPipeline extends QueryGroup {
         val train = toksDf.filter($"doc_id" % 2 === 0)
         val tri = triOf(train).groupBy($"w1", $"w2", $"w3")
           .agg(count(lit(1)).as("ct"))
-        // `eager = false` checkpoints (the sim_ann_recall note): each
-        // model table is computed once for its two broadcast consumers.
-        // The model builds are NOT skipped by an action that needs no
-        // model values: under AQE the checkpoint runs each aggregate's
-        // shuffle stage here, at build time; only the final stage
-        // waits for the first action.
+        // each model table is checkpointed, so it is computed once for
+        // its two broadcast consumers
         val bi = train.filter(size($"toks") >= 2)
           .select(explode(expr(
             "transform(slice(toks, 1, size(toks) - 1), " +
               "(t, i) -> struct(t AS wa, toks[i + 1] AS wb))")).as("bg"))
           .select($"bg.wa", $"bg.wb")
           .groupBy($"wa", $"wb").agg(count(lit(1)).as("cb"))
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
         val uni = train.select(explode($"toks").as("w"))
           .groupBy($"w").agg(count(lit(1)).as("cu"))
-          .localCheckpoint(eager = false)
+          .localCheckpoint()
         val tot = uni.agg(sum($"cu").as("n"), count(lit(1)).as("v"))
         val sCol =
           when($"ct".isNotNull, $"ct" / $"c12")
@@ -2049,7 +2034,7 @@ object TextPipeline extends QueryGroup {
         import s.implicits._
         val (merges, vocab) = learnBpe(s, dir)
         // the merge table is already on the driver
-        release(vocab)
+        Checkpoints.release(vocab)
         merges
           .toDF("merge_round", "merge_left", "merge_right", "pair_count")
           .orderBy($"merge_round")
@@ -2171,7 +2156,7 @@ object TextPipeline extends QueryGroup {
         import s.implicits._
         val (cnts, best) = learnUnigram(s, dir)
         // the discarded final E-step alone reads the `words` checkpoint
-        release(best, cnts)
+        Checkpoints.release(best, cnts)
         cnts.select($"piece", $"cnt").orderBy($"piece")
       },
       Some(unigramOracle(UnigramRounds))),
@@ -2901,11 +2886,9 @@ object TextPipeline extends QueryGroup {
     // ever pairwise and no driver-side loop exists.
     // Materialization is localCheckpoint, not persist (ADVICE r13):
     // a persist() with no reachable unpersist leaks a CacheManager
-    // entry per invocation (only clearCache() callers were safe);
-    // localCheckpoint blocks are owned by the RDD and reclaimed by
-    // the ContextCleaner once the result DataFrame is unreachable —
-    // no caller contract needed. Eager, so the one fact pass runs at
-    // build time.
+    // entry per invocation (only clearCache() callers were safe). The
+    // checkpoint is the result's own, stored as [[Checkpoints]] says;
+    // the one fact pass runs at build time.
     "pipeline_dsir_sample" -> QueryDef(
       (s, dir) => {
         import s.implicits._

@@ -23,19 +23,21 @@ import scala.util.control.NonFatal
   * Usage: runMain graft.tools.Profile <sfDir> <outDir> <suffix> <names...>
   * Writes <outDir>/<name>_<suffix>.txt with the formatted plan, and
   * <name>_<suffix>_final.txt with the AQE final plan of the noop write
-  * that ran. Prints the load canary, then per query its job counts, its
-  * operator metric rows and, after the profiled run as warm-up, the min
-  * of 3 timed runs. A query whose profiled run fails, or whose captured
+  * that ran. Prints the load canary, then per query its job counts, the
+  * persistent RDDs its build left stored, its operator metric rows and,
+  * after the profiled run as warm-up, the min of 3 timed runs. A query whose profiled run fails, or whose captured
   * plan is not final, is printed as FAILED with the reason and not
   * timed. Exits 1 if a name is not registered, before any query runs,
   * or if any query FAILED.
   */
 object Profile {
   /** One profiled run of a query: its formatted plan, the plan its noop
-    * write executed, that plan's [[ExplainAnalyze.operatorMetrics]], and
-    * the jobs the build and the execution ran. */
+    * write executed, that plan's [[ExplainAnalyze.operatorMetrics]], the
+    * jobs the build and the execution ran, and the persistent RDDs held
+    * once the build returned. */
   private[graft] final case class Capture(formatted: String, executed: SparkPlan,
-      operators: Seq[(Int, String, String, Long)], buildJobs: Int, executeJobs: Int)
+      operators: Seq[(Int, String, String, Long)], buildJobs: Int, executeJobs: Int,
+      storedAfterBuild: Int)
 
   /** Builds `name` and runs it into the noop sink, with the jobs of each
     * phase under a job tag of its own. */
@@ -47,6 +49,7 @@ object Profile {
       try body finally sc.removeJobTag(s"$tag-$phase")
     }
     val df = tagged("build")(graft.SparkEntry.queries(name)(spark, sfDir))
+    val stored = sc.getPersistentRDDs.size
     val formatted = df.queryExecution.explainString(FormattedMode)
     val executed = tagged("execute")(noopWriteExecutedPlan(spark, df))
     // the status store learns of each job from the listener bus,
@@ -54,7 +57,7 @@ object Profile {
     ListenerBus.drain(sc)
     def jobs(phase: String) = sc.statusTracker.getJobIdsForTag(s"$tag-$phase").length
     Capture(formatted, executed, ExplainAnalyze.operatorMetrics(executed),
-      jobs("build"), jobs("execute"))
+      jobs("build"), jobs("execute"), stored)
   }
 
   /** Runs `df` into the noop sink and returns the executed plan of that
@@ -125,7 +128,7 @@ object Profile {
           println(s"[profile] $name FAILED: $reason")
           true
         case Right(c) =>
-          println(s"[profile] $name jobs build ${c.buildJobs} execute ${c.executeJobs}")
+          println(s"[profile] $name jobs build ${c.buildJobs} execute ${c.executeJobs} stored ${c.storedAfterBuild}")
           for ((id, op, metric, value) <- c.operators)
             println(f"[profile] $name op $id%3d $op%-36s $metric%-28s $value")
           val fn = graft.SparkEntry.queries(name)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -34,25 +33,5 @@ class BpeSpec extends AnyFunSuite with SparkFixture with Matchers {
     val again = SparkEntry.queries("pipeline_bpe_vocab")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     again.toSeq shouldBe rows.toSeq
-  }
-
-  test("a BPE row leaves stored only the checkpoints its returned frame reads") {
-    // learnBpe frees each superseded vocab checkpoint in the call (and
-    // learnUnigram each superseded count checkpoint), the merge table
-    // row frees the vocab it has already collected, and the unigram
-    // vocab row frees the word checkpoint only its discarded final
-    // E-step reads
-    def stored = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    for (name <- Seq("pipeline_bpe_vocab", "pipeline_bpe_tokenize",
-        "pipeline_bpe_encode", "pipeline_tokenizer_eval",
-        "pipeline_unigram_vocab", "pipeline_unigram_tokenize",
-        "pipeline_unigram_encode")) {
-      val before = stored
-      val out = SparkEntry.queries(name)(spark, sfDir)
-      val read = out.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }
-      withClue(s"$name: ") { (stored -- before -- read) shouldBe empty }
-      // the freed checkpoints are not needed to read the result
-      out.collect() should not be empty
-    }
   }
 }

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -42,10 +47,42 @@ class RegistrySpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("every registered query produces a resolvable plan") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      withClue(name) {
-        noException should be thrownBy fn(spark, sfDir).schema
+    // and follows the storage rule of graft.queries.Checkpoints: its
+    // build leaves stored only what its frame reads
+    val sc = spark.sparkContext
+    def stored = sc.getPersistentRDDs.keySet.toSet
+    def reads(df: DataFrame): Set[Int] = {
+      val qe = df.queryExecution
+      val checkpoints = qe.analyzed.collectWithSubqueries { case r: LogicalRDD => r.rdd.id }
+      // ddl_view_cache's CACHE TABLE entry, read through the CacheManager
+      val cached = qe.withCachedData.collectWithSubqueries {
+        case m: InMemoryRelation if m.cacheBuilder.isCachedColumnBuffersLoaded =>
+          m.cacheBuilder.cachedColumnBuffers.id
       }
+      (checkpoints ++ cached).toSet
     }
+    val freed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = freed.add(e.rddId)
+    }
+    sc.addSparkListener(listener)
+    val leaks =
+      try SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+        withClue(name) {
+          ListenerBus.drain(sc)
+          freed.clear()
+          val before = stored
+          val df = fn(spark, sfDir)
+          noException should be thrownBy df.schema
+          val created = stored -- before
+          ListenerBus.drain(sc)
+          // a build that stored anything, kept or freed, must still read
+          // its result: the checkpoints it freed are not needed for that
+          if (created.nonEmpty || !freed.isEmpty) df.collect()
+          val unread = created -- reads(df)
+          if (unread.isEmpty) None else Some(s"$name: ${unread.size} unread")
+        }
+      } finally sc.removeSparkListener(listener)
+    leaks shouldBe empty
   }
 }
